@@ -9,9 +9,10 @@ One crawl round is one DataFrame pipeline (north rule):
 
 State is checkpointed per round under ``state_dir/rounds/round=K/`` —
 frontier, results, seen-set delta (doubling as the fetched-order log),
-bloom segments, and
-per-partition lineage metrics — committed atomically by writing a ``_COMMIT``
-marker last.  Resume = continue from the highest committed round; an
+bloom segments, and per-partition lineage metrics — committed atomically by
+writing a ``_COMMIT`` marker last.  The commit record's row counts are
+``Observation``s on the frontier and seen-delta writes: no output is re-read
+to be counted.  Resume = continue from the highest committed round; an
 interrupted round leaves no marker and is recomputed idempotently
 (overwrite-by-round-id).
 
@@ -39,7 +40,7 @@ import shutil
 from dataclasses import dataclass
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import caches
@@ -108,6 +109,15 @@ class CrawlConfig:
     # point (10^9-edge graph) ranking every N rounds divides the feedback
     # cost by N for near-identical schedules.
     link_rank_every: int = 1
+
+
+def _write_counted(df: DataFrame, path: str, **counts: Column) -> dict:
+    """Write ``df`` as parquet to ``path``; return its row count ``n`` and
+    ``counts`` (name → aggregate), observed on the write itself."""
+    obs = Observation()
+    aggs = [F.count(F.lit(1)).alias("n")] + [c.alias(k) for k, c in counts.items()]
+    df.observe(obs, *aggs).write.mode("overwrite").parquet(path)
+    return obs.get
 
 
 def edges_compact_live(state_dir: str) -> "tuple[int, Optional[str]]":
@@ -214,7 +224,11 @@ class CrawlEngine:
     # -------------------------------------------------------------- seeds
     def init_from_seeds(self, seeds: DataFrame) -> None:
         """Round 0: seed frontier.  ``seeds`` columns: url, seed_rank, query.
-        Seeds order by seed_rank → priority (0, -1, seed_rank)."""
+        Seeds order by seed_rank → priority (0, -1, seed_rank).
+
+        Seeds without a valid URL are dropped.  An empty or all-invalid seed
+        set still commits round 0, with ``frontier_size: 0``; :meth:`run`
+        then returns ``[]`` without committing round 1."""
         canon = urlops.canonical_url_col(F.col("url"))
         frontier = (
             seeds.select(
@@ -234,18 +248,12 @@ class CrawlEngine:
         rd = self._round_dir(0)
         if os.path.isdir(rd):
             shutil.rmtree(rd)
-        frontier.write.mode("overwrite").parquet(os.path.join(rd, "frontier"))
+        seeded = _write_counted(frontier, os.path.join(rd, "frontier"))
         os.makedirs(os.path.join(rd, "bloom"), exist_ok=True)
-        # seed count from the WRITTEN parquet (metadata-light, init-time
-        # only): round 1's fetch-sequence boundary sample adapts to it —
-        # with fetched == 0, frontier_size is the only batch-size signal
-        # the first round has, and it is the round whose batch can be
-        # largest (the full seed list)
-        n_seeds = self._read_frontier(0).count()
         with open(self._commit_path(0), "w") as f:
             json.dump(
                 {"round": 0, "fetched": 0, "total_fetched": 0,
-                 "frontier_size": int(n_seeds),
+                 "frontier_size": seeded["n"],
                  "format_version": STATE_FORMAT_VERSION},
                 f,
             )
@@ -817,20 +825,17 @@ class CrawlEngine:
             maybe = maybe.join(
                 seen.select("canonical_url"), on="canonical_url", how="left_anti"
             )
-        survivors = definitely_new.unionByName(maybe)
-        # exclude URLs fetched this round and URLs still waiting in the frontier
-        survivors = survivors.join(
-            selected.select("canonical_url"), on="canonical_url", how="left_anti"
-        ).join(
-            remainder.select("canonical_url"), on="canonical_url", how="left_anti"
-        ).join(
-            blocked.select("canonical_url"), on="canonical_url", how="left_anti"
+        # exclude the round's own frontier: the robots and link-rank joins
+        # keep every frontier row, so selected ∪ remainder ∪ blocked is
+        # exactly its URL set (fetched, still waiting, or robots-blocked)
+        survivors = definitely_new.unionByName(maybe).join(
+            frontier.select("canonical_url"), on="canonical_url", how="left_anti"
         )
 
         # 7. next frontier = politeness remainder ∪ new discoveries.  The
-        # ``origin`` marker column lets the commit record derive both counts
-        # from the written files (readers use the explicit FRONTIER_SCHEMA,
-        # which simply ignores it).
+        # ``origin`` marker column lets the frontier write observe the
+        # commit record's new_urls count (readers use the explicit
+        # FRONTIER_SCHEMA, which simply ignores it).
         cols = [c.split()[0] for c in FRONTIER_SCHEMA.split(", ")]
         next_frontier = (
             remainder.select(*cols).withColumn("origin", F.lit("carried"))
@@ -864,7 +869,10 @@ class CrawlEngine:
                     keep_per_pattern=self.cfg.trap_keep_per_pattern,
                     suspects=suspects,
                 )
-        next_frontier.write.mode("overwrite").parquet(os.path.join(rd, "frontier"))
+        written = _write_counted(
+            next_frontier, os.path.join(rd, "frontier"),
+            discovered=F.count_if(F.col("origin") == "discovered"),
+        )
 
         # 8. seen delta: everything attempted this round + robots-blocked.
         # Doubles as the fetched-order log (fetched_log() filters/projects
@@ -893,7 +901,10 @@ class CrawlEngine:
                 )
             )
         )
-        seen_delta.write.mode("overwrite").parquet(os.path.join(rd, "seen_delta"))
+        attempted = _write_counted(
+            seen_delta, os.path.join(rd, "seen_delta"),
+            blocked=F.count_if(F.col("fetch_status") == "robots_blocked"),
+        )
         seen_delta = self.spark.read.parquet(os.path.join(rd, "seen_delta"))
 
         # 9. bloom segments for round k (executor-side, one file per task)
@@ -933,28 +944,13 @@ class CrawlEngine:
         )
         metrics.write.mode("overwrite").parquet(os.path.join(rd, "metrics"))
 
-        # Commit-record counts come from the WRITTEN outputs (two tiny
-        # metadata-backed jobs) instead of re-running the plans that produced
-        # them — at scale, recomputing the robots join / novelty chain just
-        # to count it would double the round's work.
-        status_counts = {
-            r["fetch_status"]: r["count"]
-            for r in seen_delta.groupBy("fetch_status").count().collect()
-        }
-        origin_counts = {
-            r["origin"]: r["count"]
-            for r in self.spark.read.parquet(os.path.join(rd, "frontier"))
-            .groupBy("origin").count().collect()
-        }
-        n_fetched = sum(
-            v for s, v in status_counts.items() if s != "robots_blocked"
-        )
+        n_fetched = attempted["n"] - attempted["blocked"]
         record = {
             "round": k,
             "fetched": n_fetched,
-            "blocked": status_counts.get("robots_blocked", 0),
-            "new_urls": origin_counts.get("discovered", 0),
-            "frontier_size": sum(origin_counts.values()),
+            "blocked": attempted["blocked"],
+            "new_urls": written["discovered"],
+            "frontier_size": written["n"],
             "total_fetched": int(prev["total_fetched"]) + n_fetched,
             # requeue batches folded into this round's frontier; recording
             # them here (atomically with the round) is what makes expire()

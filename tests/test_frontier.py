@@ -6,6 +6,7 @@ round without divergence."""
 
 import os
 import shutil
+import sys
 
 import pandas as pd
 import pytest
@@ -47,7 +48,14 @@ def world(spark, tmp_path_factory):
     }
 
 
-def _make_engine(spark, world, state_name):
+def _seeds_df(spark, seeds):
+    return spark.createDataFrame(
+        pd.DataFrame(seeds, columns=["url", "seed_rank", "query"]),
+        "url string, seed_rank int, query string",
+    )
+
+
+def _make_engine(spark, world, state_name, config=None):
     state = os.path.join(world["root"], state_name)
     if os.path.isdir(state):
         shutil.rmtree(state)
@@ -56,13 +64,10 @@ def _make_engine(spark, world, state_name):
         state_dir=state,
         pages_path=world["pages_path"],
         robots=world["robots_df"],
-        config=CrawlConfig(round_seconds=ROUND_SECONDS, bloom_partitions=8,
-                           bloom_bits_per_segment=1 << 16),
+        config=config or CrawlConfig(round_seconds=ROUND_SECONDS, bloom_partitions=8,
+                                     bloom_bits_per_segment=1 << 16),
     )
-    seeds_df = spark.createDataFrame(
-        pd.DataFrame(world["seeds"]), "url string, seed_rank int, query string"
-    )
-    eng.init_from_seeds(seeds_df)
+    eng.init_from_seeds(_seeds_df(spark, world["seeds"]))
     return eng
 
 
@@ -103,6 +108,114 @@ def test_seed_commit_records_frontier_size(engine_run):
     rec0 = eng._read_commit(0)
     assert rec0["fetched"] == 0
     assert rec0["frontier_size"] == eng._read_frontier(0).count() > 0
+
+
+def _recount(spark, eng, k):
+    """The commit-record counts of round ``k``, recounted from the files
+    the round wrote."""
+    rd = eng._round_dir(k)
+    status = {
+        r["fetch_status"]: r["count"]
+        for r in spark.read.parquet(os.path.join(rd, "seen_delta"))
+        .groupBy("fetch_status").count().collect()
+    }
+    origin = {
+        r["origin"]: r["count"]
+        for r in spark.read.parquet(os.path.join(rd, "frontier"))
+        .groupBy("origin").count().collect()
+    }
+    blocked = status.pop("robots_blocked", 0)
+    return {
+        "fetched": sum(status.values()),
+        "blocked": blocked,
+        "new_urls": origin.get("discovered", 0),
+        "frontier_size": sum(origin.values()),
+    }
+
+
+def test_commit_counts_match_written_files(spark, world):
+    """Value lock on the observed commit counts: with robots blocks, the
+    trap guard pruning the frontier before its write, and an expire()
+    requeue round, every commit's counts equal a recount of the round's
+    written seen_delta/ and frontier/ files."""
+    eng = _make_engine(
+        spark, world, "state_counts",
+        CrawlConfig(round_seconds=ROUND_SECONDS, bloom_partitions=8,
+                    bloom_bits_per_segment=1 << 16,
+                    trap_threshold=3, trap_keep_per_pattern=2),
+    )
+    eng.run(max_rounds=2)
+    fetched = sorted({r["canonical_url"] for r in eng.fetched_log().collect()})
+    assert eng.expire(
+        spark.createDataFrame([(fetched[0],)], "canonical_url string")
+    ) == 1
+    eng.run(max_rounds=2)
+
+    assert eng._read_commit(0)["frontier_size"] == eng._read_frontier(0).count()
+    records = [eng._read_commit(k) for k in eng.committed_rounds()[1:]]
+    assert len(records) == 4
+    total = 0
+    for rec in records:
+        want = _recount(spark, eng, rec["round"])
+        total += want["fetched"]
+        assert {key: rec[key] for key in want} == want, rec["round"]
+        assert rec["total_fetched"] == total
+    # the paths the test exists for were all taken
+    assert any(rec["blocked"] for rec in records)
+    assert any(rec["trap_patterns"] for rec in records)
+    assert any(rec["consumed_requeue"] for rec in records)
+
+
+def test_run_round_spends_no_count_or_collect(spark, world, monkeypatch):
+    """A round's bookkeeping rides on work it already does: under the
+    default CrawlConfig, run_round never calls DataFrame.count, and calls
+    DataFrame.collect only as BloomSeenSet.update's build action."""
+    state = os.path.join(world["root"], "state_no_rescans")
+    shutil.rmtree(state, ignore_errors=True)
+    eng = CrawlEngine(spark, state, world["pages_path"], world["robots_df"])
+    eng.init_from_seeds(_seeds_df(spark, world["seeds"]))
+    frame = type(spark.range(0))
+    real_collect = frame.collect
+    calls = []
+
+    def caller():
+        f = sys._getframe(2)
+        return os.path.basename(f.f_code.co_filename), f.f_code.co_name
+
+    def count(self):
+        calls.append(("count",) + caller())
+        return 0
+
+    def collect(self):
+        calls.append(("collect",) + caller())
+        return real_collect(self)
+
+    monkeypatch.setattr(frame, "count", count)
+    monkeypatch.setattr(frame, "collect", collect)
+    records = [eng.run_round(1), eng.run_round(2)]
+    monkeypatch.undo()
+    assert all(records)
+    assert set(calls) == {("collect", "bloom.py", "update")}, calls
+
+
+@pytest.mark.parametrize(
+    "urls", [[], ["", None, "http://", "/relative/path"]],
+    ids=["empty", "all_invalid"],
+)
+def test_empty_seed_set_commits_round0_and_stops(spark, world, urls):
+    """Seeds without a valid URL are dropped; with none left, round 0
+    commits frontier_size 0 and run() returns [] without committing
+    round 1."""
+    state = os.path.join(world["root"], "state_no_seeds")
+    shutil.rmtree(state, ignore_errors=True)
+    eng = CrawlEngine(spark, state, world["pages_path"], world["robots_df"])
+    eng.init_from_seeds(
+        _seeds_df(spark, [(u, i, None) for i, u in enumerate(urls)])
+    )
+    assert eng._read_commit(0)["frontier_size"] == 0
+    assert eng.run() == []
+    assert eng.committed_rounds() == [0]
+    assert not os.path.isdir(eng._round_dir(1))
 
 
 def test_crawl_ordering_matches_oracle(spark, world, oracle, engine_run):

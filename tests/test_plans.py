@@ -194,7 +194,8 @@ def test_seq_sample_mod_uses_resolved_bucket_count(spark, frontier_df):
     selected, _ = politeness.select_batch(with_budget, num_salts=4)
     seq = politeness.global_fetch_sequence(selected, est_batch_rows=est)
     mods = {
-        int(m) for m in re.findall(r"pmod\(url_hash#\d+L?, (\d+)\)", _plan(seq))
+        int(m)
+        for m in re.findall(r"pmod\(url_hash#\d+L?, (\d+)\) = 0", _plan(seq))
     }
     assert mods == {expected}, (mods, expected, resolved)
 
