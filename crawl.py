@@ -304,6 +304,7 @@ def cmd_rank(args) -> None:
     optionally personalized to the crawl's round-0 seed hosts."""
     from pyspark.sql import functions as F
 
+    from crawler_engine_spark.frontier.rounds import host_edge_inputs
     from crawler_engine_spark.operators import linkrank
 
     spark = get_spark("crawl-rank")
@@ -314,21 +315,7 @@ def cmd_rank(args) -> None:
         if d.startswith("round=")
         and os.path.exists(os.path.join(root, d, "_COMMIT"))
     )
-    # compact-aware enumeration (same rule as the engine's rerank), via the
-    # shared reader so the rename-aside swap's .old fallback applies here
-    # too — a hand-rolled reader that only checks edges_compact would fall
-    # back to per-round deltas that retention may have retired
-    from crawler_engine_spark.frontier.rounds import edges_compact_live
-
-    base_upto, base = edges_compact_live(args.state)
-    edge_dirs = [base] if base is not None else []
-    edge_dirs += [
-        d
-        for k in committed
-        if k > base_upto
-        for d in [os.path.join(root, f"round={k}", "host_edges")]
-        if os.path.isdir(d)
-    ]
+    edge_dirs = host_edge_inputs(args.state, committed)
     if not edge_dirs:
         raise SystemExit(
             "rank: no host_edges under state "

@@ -1,10 +1,7 @@
 """Partitioned cuckoo-filter URL-seen set — the deletable alternative to
-the bloom backend (north rule: "bloom/cuckoo URL-seen set").
-
-Same segment contract as ``bloom.BloomSeenSet``: the key space is
-hash-partitioned by ``pmod(xxhash64(url), P)``; each partition owns one
-segment file, built/probed executor-side via ``applyInPandas`` so no
-segment ever moves through the driver.
+the bloom backend (north rule: "bloom/cuckoo URL-seen set").  Routing,
+build and probe are :class:`bloom.PartitionedSeenSet`'s; this module holds
+only the segment format.
 
 Why cuckoo in addition to bloom: **deletion**.  A bloom bit can never be
 cleared, so a crawl that wants recrawl/TTL semantics ("this URL's snapshot
@@ -29,15 +26,13 @@ Layout per segment file (little-endian):
 from __future__ import annotations
 
 import hashlib
-import os
 from typing import List, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from .bloom import partition_id_col
+from .bloom import PartitionedSeenSet
 
 SLOTS = 4
 MAX_KICKS = 500
@@ -73,9 +68,8 @@ class _Segment:
     @classmethod
     def load(cls, path: str, n_buckets: int) -> "_Segment":
         seg = cls(n_buckets)
-        if not os.path.exists(path):
-            return seg
-        raw = open(path, "rb").read()
+        with open(path, "rb") as f:
+            raw = f.read()
         nb = int.from_bytes(raw[0:4], "little")
         stash_len = int.from_bytes(raw[4:8], "little")
         seg.n_buckets = nb
@@ -92,16 +86,13 @@ class _Segment:
         return seg
 
     def store(self, path: str) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
+        with open(path, "wb") as f:
             f.write(self.n_buckets.to_bytes(4, "little"))
             f.write(len(self.stash).to_bytes(4, "little"))
             f.write(self.table.tobytes())
             for b, fp in self.stash:
                 f.write(int(b).to_bytes(4, "little"))
                 f.write(int(fp).to_bytes(2, "little"))
-        os.replace(tmp, path)
 
     # -- operations --------------------------------------------------------
     def _try_slot(self, bucket: int, fp: int) -> bool:
@@ -163,13 +154,11 @@ class _Segment:
         return False
 
 
-def _segment_path(root: str, pid: int) -> str:
-    return os.path.join(root, f"cuckoo_{pid:05d}.bin")
-
-
-class CuckooSeenSet:
+class CuckooSeenSet(PartitionedSeenSet):
     """Drop-in alternative to BloomSeenSet with the same update/probe API
     plus ``delete`` (recrawl/TTL support)."""
+
+    segment_prefix = "cuckoo"
 
     def __init__(
         self,
@@ -182,60 +171,29 @@ class CuckooSeenSet:
             raise ValueError(
                 f"buckets_per_segment must be a power of two, got {buckets_per_segment}"
             )
-        self.num_partitions = num_partitions
+        super().__init__(num_partitions)
         self.n_buckets = buckets_per_segment
 
-    def _apply(
-        self,
-        urls: DataFrame,
-        prev_dir: str | None,
-        out_dir: str,
-        op: str,
-        url_col: str,
-        hash_col: str,
-    ) -> int:
-        P, nb = self.num_partitions, self.n_buckets
+    def _empty(self) -> _Segment:
+        return _Segment(self.n_buckets)
 
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            pid = int(pdf["_pid"].iloc[0])
-            seg = _Segment.load(
-                _segment_path(prev_dir, pid) if prev_dir else "", nb
-            ) if prev_dir else _Segment(nb)
-            rng = np.random.RandomState(pid * 7919 + 17)
-            n = 0
-            for url in pdf[url_col]:
-                if op == "insert":
-                    seg.insert(url, rng)
-                    n += 1
-                else:
-                    n += int(seg.delete(url))
-            seg.store(_segment_path(out_dir, pid))
-            return pd.DataFrame({"pid": [pid], "n": [n]})
+    def _load(self, path: str) -> _Segment:
+        return _Segment.load(path, self.n_buckets)
 
-        routed = urls.withColumn("_pid", partition_id_col(F.col(hash_col), P))
-        touched = {
-            r["pid"]
-            for r in routed.groupBy("_pid").applyInPandas(run, "pid int, n long").collect()
-        }
-        for pid in range(P):
-            if pid not in touched:
-                seg = (
-                    _Segment.load(_segment_path(prev_dir, pid), nb)
-                    if prev_dir
-                    else _Segment(nb)
-                )
-                seg.store(_segment_path(out_dir, pid))
-        return len(touched)
+    def _write(self, seg: _Segment, path: str) -> None:
+        seg.store(path)
 
-    def update(
-        self,
-        new_urls: DataFrame,
-        prev_dir: str | None,
-        out_dir: str,
-        url_col: str = "canonical_url",
-        hash_col: str = "url_hash",
-    ) -> int:
-        return self._apply(new_urls, prev_dir, out_dir, "insert", url_col, hash_col)
+    def _insert(self, seg: _Segment, urls: pd.Series, pid: int) -> int:
+        rng = np.random.RandomState(pid * 7919 + 17)
+        for url in urls:
+            seg.insert(url, rng)
+        return len(urls)
+
+    def _delete(self, seg: _Segment, urls: pd.Series, pid: int) -> int:
+        return sum(seg.delete(url) for url in urls)
+
+    def _contains(self, seg: _Segment, url: str) -> bool:
+        return seg.contains(url)
 
     def delete(
         self,
@@ -247,26 +205,4 @@ class CuckooSeenSet:
     ) -> int:
         """Remove urls (recrawl/TTL): deleted keys become definitely-new to
         the prefilter again — something a bloom filter cannot express."""
-        return self._apply(urls, prev_dir, out_dir, "delete", url_col, hash_col)
-
-    def flag_maybe_seen(
-        self,
-        candidates: DataFrame,
-        segments_dir: str,
-        url_col: str = "canonical_url",
-        hash_col: str = "url_hash",
-    ) -> DataFrame:
-        P, nb = self.num_partitions, self.n_buckets
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-        ) + ", maybe_seen boolean"
-
-        def probe(pdf: pd.DataFrame) -> pd.DataFrame:
-            pid = int(pdf["_pid"].iloc[0])
-            seg = _Segment.load(_segment_path(segments_dir, pid), nb)
-            out = pdf.drop(columns=["_pid"]).copy()
-            out["maybe_seen"] = [seg.contains(u) for u in pdf[url_col]]
-            return out
-
-        routed = candidates.withColumn("_pid", partition_id_col(F.col(hash_col), P))
-        return routed.groupBy("_pid").applyInPandas(probe, out_schema)
+        return self._build(urls, prev_dir, out_dir, self._delete, url_col, hash_col)

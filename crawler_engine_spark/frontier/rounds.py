@@ -120,16 +120,15 @@ def _write_counted(df: DataFrame, path: str, **counts: Column) -> dict:
     return obs.get
 
 
-def edges_compact_live(state_dir: str) -> "tuple[int, Optional[str]]":
-    """(upto_round, data_dir) of the committed edge compaction under
-    ``state_dir`` — the ONE reader every consumer (engine rerank,
-    ``crawl.py rank``) must go through, because it honors the rename-aside
-    swap's ``.old`` fallback: between the two renames of
-    :meth:`CrawlEngine.compact_host_edges` only ``edges_compact.old`` is
-    complete, and a reader that only checks ``edges_compact`` would
-    silently fall back to per-round deltas that retention may already have
-    retired.  Returns (-1, None) when no compaction is committed."""
-    final = os.path.join(state_dir, "edges_compact")
+def compact_live(state_dir: str, name: str) -> "tuple[int, Optional[str]]":
+    """(upto_round, data_dir) of the committed compaction ``name`` under
+    ``state_dir`` (``seen_compact`` or ``edges_compact``); (-1, None) when
+    none is committed.  Every reader goes through here because it honors
+    the rename-aside swap of :meth:`CrawlEngine._compact`: between its two
+    renames only ``<name>.old`` is complete, and a reader that only checked
+    ``<name>`` would fall back to per-round deltas that retention may
+    already have retired."""
+    final = os.path.join(state_dir, name)
     for d in (final, final + ".old"):
         try:
             with open(os.path.join(d, "_COMPACT")) as f:
@@ -140,6 +139,22 @@ def edges_compact_live(state_dir: str) -> "tuple[int, Optional[str]]":
         if os.path.isdir(data):
             return upto, data
     return -1, None
+
+
+def host_edge_inputs(state_dir: str, committed: List[int]) -> List[str]:
+    """Edge dirs for a link-rank recompute over the ``committed`` rounds:
+    the committed edge compaction (if any) plus only the per-round
+    ``host_edges`` deltas after it.  Duplicate pairs across compact and
+    tail are harmless — pagerank distincts edges."""
+    upto, base = compact_live(state_dir, "edges_compact")
+    tail = [
+        d
+        for j in committed
+        if j > upto
+        for d in [os.path.join(state_dir, "rounds", f"round={j}", "host_edges")]
+        if os.path.isdir(d)
+    ]
+    return ([base] if base else []) + tail
 
 
 class CrawlEngine:
@@ -271,11 +286,11 @@ class CrawlEngine:
         parquet dir per round — file-listing and small-file read
         amplification that grows linearly with crawl length; with it, the
         union is one consolidated dir + a bounded tail."""
-        c = self.compacted_upto()
+        c, data = compact_live(self.state_dir, "seen_compact")
         base = None
         start = 1
-        if 0 < c <= upto_round:
-            base = self.spark.read.parquet(os.path.join(self._compact_dir(), "data"))
+        if data is not None and c <= upto_round:
+            base = self.spark.read.parquet(data)
             start = c + 1
         paths = [
             os.path.join(self._round_dir(k), "seen_delta")
@@ -427,49 +442,55 @@ class CrawlEngine:
         return n
 
     # -------------------------------------------------------- compaction
-    def _compact_dir(self) -> str:
-        return os.path.join(self.state_dir, "seen_compact")
+    def _compact(self, name: str, upto: int, df: DataFrame) -> int:
+        """Write ``df`` as the compaction ``state_dir/name`` covering rounds
+        ≤ ``upto``: ``data`` and the ``_COMPACT`` marker go to a temp dir,
+        which then replaces the live one by a rename-aside swap.  Not
+        rmtree-then-rename: a crash between a delete and the rename-in would
+        leave only the temp dir, and the per-round deltas the compaction
+        superseded may already be retired.  At every instant a complete
+        compaction exists at ``name`` or ``name.old`` (:func:`compact_live`
+        falls back to it); the ``.old`` dir is deleted only after the new
+        one is in place."""
+        final = os.path.join(self.state_dir, name)
+        tmp, old = final + ".tmp", final + ".old"
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp)
+        df.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
+        with open(os.path.join(tmp, "_COMPACT"), "w") as f:
+            json.dump({"upto_round": upto,
+                       "format_version": STATE_FORMAT_VERSION}, f)
+        if os.path.isdir(final):
+            if os.path.isdir(old):
+                shutil.rmtree(old)
+            os.rename(final, old)
+        os.rename(tmp, final)
+        if os.path.isdir(old):
+            shutil.rmtree(old)
+        return upto
 
     def compacted_upto(self) -> int:
         """Highest round covered by a committed compaction (-1 if none)."""
-        try:
-            with open(os.path.join(self._compact_dir(), "_COMPACT")) as f:
-                return int(json.load(f)["upto_round"])
-        except (OSError, ValueError, KeyError):
-            return -1
+        return compact_live(self.state_dir, "seen_compact")[0]
 
     def compact_seen(self, upto_round: Optional[int] = None) -> int:
         """Consolidate seen deltas ≤ upto_round (default: last committed)
         into one hash-partitioned parquet dir.
 
         Incremental (reads the previous compact + only the new tail) and
-        crash-safe: the new compact is fully written to a temp dir BEFORE
-        the old one is swapped out, and readers require the _COMPACT marker
-        — a crash mid-swap just falls back to the per-round deltas (the
-        compact is derived data; the deltas remain the source of truth for
-        fetched_log/resume)."""
+        crash-safe (:meth:`_compact`).  The compact is derived data; the
+        deltas remain the source of truth for fetched_log/resume."""
         upto = self.last_committed() if upto_round is None else upto_round
         if upto <= self.compacted_upto():
             return self.compacted_upto()
         seen = self._read_seen(upto)
         if seen is None:
             return -1
-        final = self._compact_dir()
-        tmp = final + ".tmp"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
         p = self.cfg.bloom_partitions
-        (
-            seen.repartition(p, F.pmod(F.col("url_hash"), F.lit(p)))
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "data"))
+        self._compact(
+            "seen_compact", upto,
+            seen.repartition(p, F.pmod(F.col("url_hash"), F.lit(p))),
         )
-        with open(os.path.join(tmp, "_COMPACT"), "w") as f:
-            json.dump({"upto_round": upto,
-                       "format_version": STATE_FORMAT_VERSION}, f)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
         # Prune tombstone batches the compaction superseded: the base is
         # tombstone-filtered, and tail deltas all have round > upto, so a
         # batch with expired_at <= upto can never match anything again.
@@ -483,99 +504,30 @@ class CrawlEngine:
                     shutil.rmtree(os.path.join(t_root, name))
         return upto
 
-    def _edges_compact_dir(self) -> str:
-        return os.path.join(self.state_dir, "edges_compact")
-
-    def _edges_live_dir(self) -> Optional[str]:
-        """The directory holding a complete edge compaction: the final dir,
-        or — during the rename-aside swap window of
-        :meth:`compact_host_edges` (crash between the two renames) — the
-        ``.old`` dir it was moved to.  None when no compaction committed."""
-        final = self._edges_compact_dir()
-        for d in (final, final + ".old"):
-            if os.path.isfile(os.path.join(d, "_COMPACT")):
-                return d
-        return None
-
     def edges_compacted_upto(self) -> int:
         """Highest round covered by a committed edge compaction (-1 if
         none)."""
-        return edges_compact_live(self.state_dir)[0]
+        return compact_live(self.state_dir, "edges_compact")[0]
 
     def compact_host_edges(self, upto_round: Optional[int] = None) -> int:
         """Consolidate the per-round host→host edge deltas ≤ upto_round
         into one distinct parquet dir — bounds the link-rank recompute's
         read fan-in on long crawls the way compact_seen bounds the novelty
         anti-join's.  Incremental (previous compact + only the new tail)
-        and crash-safe (full temp-dir write, then marker, then swap); the
-        compact is derived data, so superseded per-round deltas may be
-        retired by retention afterwards."""
+        and crash-safe (:meth:`_compact`); the compact is derived data, so
+        superseded per-round deltas may be retired by retention afterwards."""
         upto = self.last_committed() if upto_round is None else upto_round
         prev = self.edges_compacted_upto()
         if upto <= prev:
             return prev
-        dirs = [
-            d
-            for j in self.committed_rounds()
-            if prev < j <= upto
-            for d in [os.path.join(self._round_dir(j), "host_edges")]
-            if os.path.isdir(d)
-        ]
-        final = self._edges_compact_dir()
-        live = self._edges_live_dir()
-        if prev >= 0 and live is not None:
-            base = os.path.join(live, "data")
-            if os.path.isdir(base):
-                dirs.append(base)
+        dirs = host_edge_inputs(
+            self.state_dir, [j for j in self.committed_rounds() if j <= upto]
+        )
         if not dirs:
             return prev
-        tmp = final + ".tmp"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        (
-            self.spark.read.parquet(*dirs)
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(tmp, "data"))
+        return self._compact(
+            "edges_compact", upto, self.spark.read.parquet(*dirs).distinct()
         )
-        with open(os.path.join(tmp, "_COMPACT"), "w") as f:
-            json.dump({"upto_round": upto,
-                       "format_version": STATE_FORMAT_VERSION}, f)
-        # swap via rename-aside, not rmtree-then-rename: a crash between a
-        # delete and the rename-in would leave only the .tmp dir, and since
-        # superseded per-round edge deltas may be retired by retention, that
-        # window could permanently lose compacted edge history (ADVICE r03).
-        # Invariant at every instant: a complete compaction exists at
-        # `final` or `final.old` (edges_compacted_upto falls back to .old);
-        # a live .old is only deleted AFTER the new final is in place.
-        old = final + ".old"
-        if os.path.isdir(final):
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            os.rename(final, old)
-        os.rename(tmp, final)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        return upto
-
-    def _host_edge_inputs(self, committed: List[int]) -> List[str]:
-        """Edge-delta dirs for a rank recompute: the committed compact (if
-        any) plus only the per-round deltas after it.  Duplicate pairs
-        across compact and tail are harmless — pagerank distincts edges."""
-        base_upto, base = edges_compact_live(self.state_dir)
-        out = []
-        if base is not None:
-            out.append(base)
-        else:
-            base_upto = -1
-        out += [
-            d
-            for j in committed
-            if j > base_upto
-            for d in [os.path.join(self._round_dir(j), "host_edges")]
-            if os.path.isdir(d)
-        ]
-        return out
 
     def run_round(self, k: int) -> Optional[dict]:
         """Execute round ``k`` (requires round ``k-1`` committed).
@@ -680,7 +632,7 @@ class CrawlEngine:
                     os.path.join(self._round_dir(ranked[-1]), "host_ranks")
                 )
             else:
-                edge_dirs = self._host_edge_inputs(committed)
+                edge_dirs = host_edge_inputs(self.state_dir, committed)
                 if edge_dirs:
                     teleport = (
                         self._read_frontier(0).select(

@@ -4,8 +4,10 @@ pure-Python oracle simulator's crawl ordering and final URL-seen set exactly
 under the same seed list + politeness budget"), and resume from a killed
 round without divergence."""
 
+import json
 import os
 import shutil
+import subprocess
 import sys
 
 import pandas as pd
@@ -13,7 +15,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_engine_spark.data import gen
-from crawler_engine_spark.frontier.rounds import CrawlConfig, CrawlEngine
+from crawler_engine_spark.frontier.rounds import (
+    CrawlConfig,
+    CrawlEngine,
+    host_edge_inputs,
+)
 from crawler_engine_spark.frontier.simulator import SimRobots, simulate_crawl
 
 N_DOCS = 150
@@ -166,13 +172,16 @@ def test_commit_counts_match_written_files(spark, world):
     assert any(rec["consumed_requeue"] for rec in records)
 
 
-def test_run_round_spends_no_count_or_collect(spark, world, monkeypatch):
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_run_round_spends_no_count_or_collect(spark, world, monkeypatch, seen_filter):
     """A round's bookkeeping rides on work it already does: under the
-    default CrawlConfig, run_round never calls DataFrame.count, and calls
-    DataFrame.collect only as BloomSeenSet.update's build action."""
-    state = os.path.join(world["root"], "state_no_rescans")
+    default CrawlConfig with either seen-set backend, run_round never calls
+    DataFrame.count, and calls DataFrame.collect only as the seen set's
+    build action (PartitionedSeenSet._build)."""
+    state = os.path.join(world["root"], f"state_no_rescans_{seen_filter}")
     shutil.rmtree(state, ignore_errors=True)
-    eng = CrawlEngine(spark, state, world["pages_path"], world["robots_df"])
+    eng = CrawlEngine(spark, state, world["pages_path"], world["robots_df"],
+                      CrawlConfig(seen_filter=seen_filter))
     eng.init_from_seeds(_seeds_df(spark, world["seeds"]))
     frame = type(spark.range(0))
     real_collect = frame.collect
@@ -195,7 +204,7 @@ def test_run_round_spends_no_count_or_collect(spark, world, monkeypatch):
     records = [eng.run_round(1), eng.run_round(2)]
     monkeypatch.undo()
     assert all(records)
-    assert set(calls) == {("collect", "bloom.py", "update")}, calls
+    assert set(calls) == {("collect", "bloom.py", "_build")}, calls
 
 
 @pytest.mark.parametrize(
@@ -334,7 +343,7 @@ def test_seen_compaction_preserves_semantics(spark, world, oracle):
     )
     eng.run(max_rounds=2)
     assert eng.compacted_upto() == 2
-    with open(os.path.join(eng._compact_dir(), "_COMPACT")) as f:
+    with open(os.path.join(eng.state_dir, "seen_compact", "_COMPACT")) as f:
         assert _json.load(f)["upto_round"] == 2
 
     # resume across the compaction boundary with a fresh engine
@@ -351,7 +360,7 @@ def test_seen_compaction_preserves_semantics(spark, world, oracle):
     assert {r["canonical_url"] for r in eng2.seen().collect()} == sim_seen
 
     # a crash mid-swap (compact dir gone, marker gone) falls back to deltas
-    shutil.rmtree(eng2._compact_dir())
+    shutil.rmtree(os.path.join(eng2.state_dir, "seen_compact"))
     assert eng2.compacted_upto() == -1
     assert {r["canonical_url"] for r in eng2.seen().collect()} == sim_seen
 
@@ -523,6 +532,49 @@ def test_bloom_no_false_negatives(spark, world, engine_run):
     flagged = eng.bloom.flag_maybe_seen(
         seen, os.path.join(eng._round_dir(last), "bloom")
     )
+    assert flagged.where(~F.col("maybe_seen")).count() == 0
+
+
+@pytest.mark.parametrize("backend", ["bloom", "cuckoo"])
+def test_seen_set_segment_contract(spark, tmp_path, backend):
+    """Both seen-set backends keep the segment contract: an update writes
+    all P segment files, carrying the partitions it did not touch forward
+    byte-identical from prev_dir; prev_dir=None starts from empty segments;
+    and the probe has no false negatives."""
+    from crawler_engine_spark.frontier.bloom import BloomSeenSet
+    from crawler_engine_spark.frontier.cuckoo import CuckooSeenSet
+
+    P = 4
+    if backend == "bloom":
+        seen_set = BloomSeenSet(num_partitions=P, bits_per_segment=1 << 12)
+    else:
+        seen_set = CuckooSeenSet(num_partitions=P, buckets_per_segment=1 << 8)
+    urls = spark.createDataFrame(
+        [(f"https://h{i % 7}.example/p{i}",) for i in range(80)],
+        "canonical_url string",
+    ).withColumn("url_hash", F.xxhash64("canonical_url"))
+    urls = urls.withColumn("pid", F.pmod("url_hash", F.lit(P)))
+    assert {r["pid"] for r in urls.select("pid").distinct().collect()} == set(range(P))
+    first = urls.where("pid IN (0, 1)").drop("pid")
+    second = urls.where("pid IN (2, 3)").drop("pid")
+    d0, d1 = tmp_path / "b0", tmp_path / "b1"
+
+    assert seen_set.update(first, prev_dir=None, out_dir=str(d0)) == 2
+    assert seen_set.update(second, prev_dir=str(d0), out_dir=str(d1)) == 2
+
+    def segments(d):
+        files = sorted(d.iterdir())
+        assert len(files) == P and not any(f.suffix == ".tmp" for f in files)
+        return [f.read_bytes() for f in files]
+
+    b0, b1 = segments(d0), segments(d1)
+    assert sorted(os.listdir(d0)) == sorted(os.listdir(d1))
+    # partitions 0, 1 are untouched by the second update: carried forward
+    assert [x == y for x, y in zip(b0, b1)] == [True, True, False, False]
+    # prev_dir=None: partitions 2, 3 start as the empty segment
+    assert b0[2] == b0[3]
+    assert seen_set.flag_maybe_seen(second, str(d0)).where("maybe_seen").count() == 0
+    flagged = seen_set.flag_maybe_seen(first.unionByName(second), str(d1))
     assert flagged.where(~F.col("maybe_seen")).count() == 0
 
 
@@ -1016,7 +1068,7 @@ def test_host_edge_compaction_bounds_rank_read_fanin(spark, tmp_path):
     assert upto == 2 and compacted.edges_compacted_upto() == 2
     # compact contents = distinct union of the deltas it covers
     base = spark.read.parquet(
-        compacted._edges_compact_dir() + "/data"
+        compacted.state_dir + "/edges_compact/data"
     ).collect()
     assert len(base) == len(set((r["src_host"], r["dst_host"]) for r in base))
     # retention: superseded per-round deltas can go away
@@ -1045,17 +1097,68 @@ def test_host_edge_compaction_bounds_rank_read_fanin(spark, tmp_path):
     # crash window of the rename-aside swap (ADVICE r03): a crash between
     # the two renames leaves only edges_compact.old — readers must fall
     # back to it, and the next compaction must recover from it.
-    final = compacted._edges_compact_dir()
+    final = os.path.join(compacted.state_dir, "edges_compact")
     os.rename(final, final + ".old")
     assert compacted.edges_compacted_upto() == 3
     assert any(
         p.endswith("edges_compact.old/data")
-        for p in compacted._host_edge_inputs(compacted.committed_rounds())
+        for p in host_edge_inputs(compacted.state_dir, compacted.committed_rounds())
     )
     compacted.run(max_rounds=1)  # round 4 adds a delta
     assert compacted.compact_host_edges() == 4
     assert os.path.isdir(final) and not os.path.isdir(final + ".old")
     assert compacted.edges_compacted_upto() == 4
+
+
+def test_cli_rank_reads_edge_compaction_plus_tail(spark, tmp_path):
+    """``crawl.py rank`` reads host edges through the same compaction
+    reader as the engine: with the superseded deltas retired and the
+    compaction caught in the rename-aside crash window (only
+    ``edges_compact.old``), it ranks compaction + tail and writes the same
+    rank_micro per host as pagerank over the uncompacted edge dirs."""
+    from crawler_engine_spark.operators import linkrank
+
+    pages_path, robots, seeds = _authority_corpus(spark, tmp_path)
+    state = str(tmp_path / "state_cli_rank")
+    eng = CrawlEngine(
+        spark, state_dir=state, pages_path=pages_path, robots=robots,
+        config=CrawlConfig(round_seconds=1.0, bloom_partitions=8,
+                           bloom_bits_per_segment=1 << 16,
+                           link_rank_budget=True),
+    )
+    eng.init_from_seeds(seeds)
+    assert len(eng.run(max_rounds=3)) == 3
+    edge_dirs = [
+        d for j in eng.committed_rounds()
+        for d in [eng._round_dir(j) + "/host_edges"] if os.path.isdir(d)
+    ]
+    assert len(edge_dirs) == 3
+    want = {
+        r["node"]: r["rank_micro"]
+        for r in linkrank.pagerank(
+            spark.read.parquet(*edge_dirs), src_col="src_host",
+            dst_col="dst_host", iterations=4, eager=True,
+        ).collect()
+    }
+
+    assert eng.compact_host_edges(upto_round=2) == 2
+    for d in edge_dirs[:2]:
+        shutil.rmtree(d)
+    final = os.path.join(state, "edges_compact")
+    os.rename(final, final + ".old")
+
+    out = str(tmp_path / "ranks")
+    proc = subprocess.run(
+        [sys.executable, os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "crawl.py"), "rank",
+         "--state", state, "--out", out, "--iterations", "4"],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    rec = json.loads([l for l in proc.stdout.splitlines() if l.startswith("{")][-1])
+    assert rec["edge_inputs"] == 2  # edges_compact.old/data + round 3's delta
+    got = {r["node"]: r["rank_micro"] for r in spark.read.parquet(out).collect()}
+    assert got == want
 
 
 def test_engine_link_rank_cadence_reuses_rank_table(spark, tmp_path):

@@ -1,6 +1,8 @@
 """Plan-quality tests: the 'cite-by-design' Catalyst properties (SURVEY §4)
 verified in explain() output — pushdown, pruning, broadcast, codegen."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -333,6 +335,17 @@ def test_compacted_seen_scan_reads_single_base(spark, tmp_path):
     eng.run(max_rounds=3)
     plan = _plan(eng.seen())
     assert plan.count("FileScan") == 1  # the compact base only
+
+    # crash window of the rename-aside swap: only seen_compact.old is
+    # complete, and readers fall back to it
+    final = str(tmp_path / "state" / "seen_compact")
+    os.rename(final, final + ".old")
+    assert eng.compacted_upto() == 3
+    assert _plan(eng.seen()).count("FileScan") == 1
+    # the next compaction recovers: a new final dir, the .old one gone
+    assert len(eng.run(max_rounds=1)) == 1
+    assert eng.compact_seen() == 4
+    assert os.path.isdir(final) and not os.path.isdir(final + ".old")
 
 
 def test_windowed_operator_plans(spark):
