@@ -15,10 +15,11 @@ import argparse
 import json
 import os
 import sys
+from dataclasses import replace
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from crawler_engine_spark.config import EngineConfig
+from crawler_engine_spark.config import CrawlConfig
 from crawler_engine_spark.session import get_spark
 
 
@@ -38,7 +39,7 @@ def cmd_extract(args) -> None:
     from crawler_engine_spark.operators.shaping import shape_results
     from crawler_engine_spark.sources.sinks import read_pages, write_results
 
-    cfg = EngineConfig.load(args.config)
+    cfg = CrawlConfig.load(args.config)
     spark = get_spark("crawl-extract")
     pages = read_pages(spark, args.pages)
     opts = cfg.extract_opts
@@ -83,9 +84,20 @@ def cmd_scrape(args) -> None:
 def cmd_crawl(args) -> None:
     import pandas as pd
 
-    from crawler_engine_spark.frontier.rounds import CrawlConfig, CrawlEngine
+    from crawler_engine_spark.frontier.rounds import CrawlEngine
 
-    cfg = EngineConfig.load(args.config)
+    flags = {
+        "round_seconds": args.round_seconds,
+        "trap_threshold": args.trap_threshold,
+        "trap_keep_per_pattern": args.trap_keep,
+        "link_rank_budget": args.link_rank_budget or None,
+        "link_rank_every": args.link_rank_every,
+        "link_rank_focus": args.link_rank_focus or None,
+    }
+    cfg = replace(
+        CrawlConfig.load(args.config),
+        **{k: v for k, v in flags.items() if v is not None},
+    )
     spark = get_spark("crawl-rounds")
     if args.robots:
         robots = spark.read.parquet(args.robots)
@@ -94,36 +106,7 @@ def cmd_crawl(args) -> None:
             [], "host string, disallow_prefixes array<string>, crawl_delay_s double"
         )
     engine = CrawlEngine(
-        spark,
-        state_dir=args.state,
-        pages_path=args.pages,
-        robots=robots,
-        config=CrawlConfig(
-            round_seconds=args.round_seconds or cfg.round_seconds,
-            num_salts=cfg.num_salts,
-            bloom_partitions=cfg.bloom_partitions,
-            bloom_bits_per_segment=cfg.bloom_bits_per_segment,
-            mode=cfg.mode,
-            extract_opts=cfg.extract_opts,
-            trap_threshold=(
-                args.trap_threshold
-                if args.trap_threshold is not None
-                else cfg.trap_threshold
-            ),
-            trap_keep_per_pattern=(
-                args.trap_keep
-                if args.trap_keep is not None
-                else cfg.trap_keep_per_pattern
-            ),
-            link_rank_budget=args.link_rank_budget or cfg.link_rank_budget,
-            link_rank_iterations=cfg.link_rank_iterations,
-            link_rank_every=(
-                args.link_rank_every
-                if args.link_rank_every is not None
-                else cfg.link_rank_every
-            ),
-            link_rank_focus=args.link_rank_focus or cfg.link_rank_focus,
-        ),
+        spark, state_dir=args.state, pages_path=args.pages, robots=robots, config=cfg
     )
     if engine.last_committed() < 0:
         if args.sitemap_seeds:
@@ -163,7 +146,7 @@ def cmd_crawl(args) -> None:
 def cmd_expire(args) -> None:
     """Recrawl/TTL surface: expire URLs in a crawl state so the next
     `crawl` run fetches them again (tombstone + requeue)."""
-    from crawler_engine_spark.frontier.rounds import CrawlConfig, CrawlEngine
+    from crawler_engine_spark.frontier.rounds import CrawlEngine
 
     spark = get_spark("crawl-expire")
     robots = spark.createDataFrame(
@@ -466,7 +449,7 @@ def cmd_interactive(args) -> None:
     from crawler_engine_spark.operators.extraction import extract_pages
     from crawler_engine_spark.sources.sinks import read_pages
 
-    cfg = EngineConfig.load(args.config)
+    cfg = CrawlConfig.load(args.config)
     spark = get_spark("crawl-interactive")
     pages = read_pages(spark, args.pages).cache()
 
@@ -507,46 +490,21 @@ def cmd_interactive(args) -> None:
     spark.stop()
 
 
-_ENV_TEMPLATE = """\
-# crawler_engine_spark configuration (reference knob names, env.example parity)
-INTELLIGENT_EXTRACTOR_STRATEGY=adaptive
-INTELLIGENT_EXTRACTOR_RELEVANCE_THRESHOLD=0.6
-INTELLIGENT_EXTRACTOR_CONFIDENCE_THRESHOLD=0.7
-INTELLIGENT_EXTRACTOR_MIN_CONTENT_LENGTH=100
-INTELLIGENT_EXTRACTOR_REMOVE_ADS=true
-INTELLIGENT_EXTRACTOR_REMOVE_NAVIGATION=true
-INTELLIGENT_EXTRACTOR_ENABLE_HIDDEN_CONTENT=true
-INTELLIGENT_EXTRACTOR_EXTRACT_TABLES=true
-INTELLIGENT_EXTRACTOR_EXTRACT_LISTS=true
-INTELLIGENT_EXTRACTOR_EXTRACT_FORMS=false
-INTELLIGENT_EXTRACTOR_EXTRACT_LINKS=true
-INTELLIGENT_EXTRACTOR_EXTRACT_IMAGES=false
-INTELLIGENT_EXTRACTOR_REQUESTS_PER_SECOND=2.0
-INTELLIGENT_EXTRACTOR_DELAY_BETWEEN_REQUESTS=0.5
-# engine-specific (frontier)
-CRAWL_ROUND_SECONDS=10.0
-CRAWL_NUM_SALTS=8
-CRAWL_BLOOM_PARTITIONS=32
-CRAWL_BLOOM_BITS=1048576
-CRAWL_MAX_ROUNDS=100
-CRAWL_TRAP_THRESHOLD=0
-CRAWL_TRAP_KEEP=100
-"""
-
-
 def cmd_init(args) -> None:
     """Write a config template (reference cli.py:320-342 `init`): .env,
-    yaml, or json — the yaml/json templates round-trip through
-    ``EngineConfig.from_file`` (--config)."""
+    yaml, or json, setting every knob — the .env template round-trips
+    through ``CrawlConfig.from_env`` and the yaml/json templates through
+    ``CrawlConfig.from_file`` (--config)."""
     fmt = args.format or "env"
     path = args.out or {"env": ".env", "yaml": "config.yaml", "json": "config.json"}[fmt]
     if os.path.exists(path) and not args.force:
         print(json.dumps({"command": "init", "error": f"{path} exists (use --force)"}))
         sys.exit(1)
+    template = CrawlConfig(mode="adaptive")
     if fmt == "env":
-        body = _ENV_TEMPLATE
+        body = template.to_env()
     else:
-        data = EngineConfig().to_dict()
+        data = template.to_dict()
         if fmt == "yaml":
             try:
                 import yaml

@@ -4,7 +4,9 @@ Realizes the reference's global rate limits (requests_per_second=2.0,
 delay_between_requests=0.5 s, models/config.py:158-161) as a *per-host
 per-round budget* — the distributed analog of its asyncio semaphores
 (core/extractor.py:290-296) — plus robots.txt handling the reference lacks
-(north-rule requirement).
+(north-rule requirement).  The budget comes from each host's robots crawl
+delay; hosts without one get the constant ``DEFAULT_CRAWL_DELAY_S`` (the
+reference's delay_between_requests default), which is not a config knob.
 
 Skew handling (explicit, per north rule): host popularity is Zipf-skewed, so
 a single window over ``host`` would straggle on hot hosts.  Selection is
@@ -29,8 +31,7 @@ from pyspark.sql import functions as F
 
 from .. import caches
 
-DEFAULT_REQUESTS_PER_SECOND = 2.0  # models/config.py:159
-DEFAULT_CRAWL_DELAY_S = 0.5        # models/config.py:161
+DEFAULT_CRAWL_DELAY_S = 0.5  # models/config.py:161
 DEFAULT_ROUND_SECONDS = 10.0
 DEFAULT_NUM_SALTS = 8
 

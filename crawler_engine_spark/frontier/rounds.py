@@ -37,14 +37,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from dataclasses import dataclass
 from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .. import caches
-from ..kernels.extract import DEFAULT_OPTIONS, ExtractOptions
+from ..config import CrawlConfig
 from ..operators import urlops
 from ..operators.extraction import extract_pages
 from . import politeness, traps
@@ -59,56 +58,6 @@ FRONTIER_SCHEMA = (
 # when the on-disk layout changes incompatibly (v2: seen_delta carries the
 # fetched log incl. 'depth'; the v1 per-round 'fetched' dir is gone).
 STATE_FORMAT_VERSION = 2
-
-
-@dataclass
-class CrawlConfig:
-    round_seconds: float = politeness.DEFAULT_ROUND_SECONDS
-    num_salts: int = politeness.DEFAULT_NUM_SALTS
-    bloom_partitions: int = 32
-    bloom_bits_per_segment: int = 1 << 20
-    mode: Optional[str] = None  # None → adaptive (reference dispatch)
-    extract_opts: ExtractOptions = DEFAULT_OPTIONS
-    max_rounds: int = 100
-    # Token-bucket burst capacity in units of one round's refill; 1 ≡ the
-    # stateless per-round budget, >1 lets idle hosts accumulate allowance.
-    burst_rounds: int = 1
-    # Compact the exact seen set every N committed rounds (0 = never).  The
-    # per-round deltas are kept either way (they are the fetched log /
-    # resume source of truth); compaction only bounds the anti-join's read
-    # fan-in on long crawls.
-    compact_every: int = 0
-    # Prefilter backend: 'bloom' (smaller, append-only) or 'cuckoo'
-    # (deletable — enables recrawl/TTL via CuckooSeenSet.delete).  Both keep
-    # the no-false-negative contract; exactness always rests on the exact
-    # anti-join either way.
-    seen_filter: str = "bloom"
-    # Crawl-trap guard (frontier/traps.py): flag any (host, URL-template)
-    # whose next-frontier distinct-URL count reaches trap_threshold and keep
-    # only the trap_keep_per_pattern lowest-hash URLs from it.  0 disables —
-    # the default, because the threshold is corpus-relative (10^4 is noise at
-    # the 10^10 design point, a whole site at toy scale).
-    trap_threshold: int = 0
-    trap_keep_per_pattern: int = 100
-    # Link-graph budget feedback (operators/linkrank.py): PageRank the
-    # crawl's own accumulated host→host link graph each round and scale
-    # every eligible host's politeness budget by its authority (0.5×–2×,
-    # ≥1 liveness floor) — well-linked hosts earn throughput, obscure ones
-    # are throttled, never starved.  Off by default: the signal needs ≥1
-    # committed round of discovered edges before it can bite.
-    link_rank_budget: bool = False
-    link_rank_iterations: int = 5
-    # Focused crawling: teleport the budget PageRank to the crawl's own
-    # round-0 seed hosts, so "authoritative" means authoritative AS SEEN
-    # FROM the seeds (topic-local), not globally — off-topic hub farms
-    # discovered late earn less budget than under the uniform restart.
-    link_rank_focus: bool = False
-    # Re-rank cadence: recompute PageRank only when the last rank table is
-    # ≥ this many rounds old, reusing the written table in between.  The
-    # rank table changes slowly relative to the frontier, so at the design
-    # point (10^9-edge graph) ranking every N rounds divides the feedback
-    # cost by N for near-identical schedules.
-    link_rank_every: int = 1
 
 
 def _write_counted(df: DataFrame, path: str, **counts: Column) -> dict:
@@ -179,8 +128,8 @@ class CrawlEngine:
             from .cuckoo import CuckooSeenSet
 
             # round the bloom-sizing knob down to the cuckoo backend's
-            # power-of-two bucket requirement (any CRAWL_BLOOM_BITS value
-            # stays valid for either backend)
+            # power-of-two bucket requirement (any bloom_bits_per_segment
+            # value stays valid for either backend)
             raw = max(config.bloom_bits_per_segment // 64, 4)
             self.bloom = CuckooSeenSet(
                 num_partitions=config.bloom_partitions,

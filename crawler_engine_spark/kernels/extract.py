@@ -60,7 +60,6 @@ from . import textops, urls as urlkit
 @dataclass(frozen=True)
 class ExtractOptions:
     relevance_threshold: float = 0.6
-    confidence_threshold: float = 0.7
     min_content_length: int = 100
     remove_ads: bool = True
     remove_navigation: bool = True

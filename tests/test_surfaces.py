@@ -10,7 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_engine_spark.config import EngineConfig
+from crawler_engine_spark.config import CrawlConfig
 from crawler_engine_spark.data import gen
 from crawler_engine_spark.kernels.scrape import scrape_page_metadata
 from crawler_engine_spark.operators import shaping
@@ -190,7 +190,7 @@ def test_engine_config_from_env(monkeypatch):
     monkeypatch.setenv("INTELLIGENT_EXTRACTOR_STRATEGY", "semantic")
     monkeypatch.setenv("CRAWL_ROUND_SECONDS", "42")
     monkeypatch.setenv("CRAWL_LINK_RANK", "true")
-    cfg = EngineConfig.from_env()
+    cfg = CrawlConfig.from_env()
     assert cfg.extract_opts.relevance_threshold == 0.4
     assert cfg.extract_opts.extract_forms is True
     assert cfg.mode == "semantic"
@@ -209,29 +209,138 @@ def test_engine_config_file_overrides_env(monkeypatch, tmp_path):
     cfg_file.write_text(json.dumps({
         "extraction": {"strategy": "structured", "relevance_threshold": 0.25},
         "performance": {"requests_per_second": 9.5},
+        "crawl": {"trap_threshold": 250},
     }))
-    cfg = EngineConfig.load(str(cfg_file))
+    cfg = CrawlConfig.load(str(cfg_file))
     assert cfg.mode == "structured"              # file wins
     assert cfg.extract_opts.relevance_threshold == 0.25
-    assert cfg.requests_per_second == 9.5
+    assert cfg.trap_threshold == 250
     assert cfg.extract_opts.min_content_length == 77  # env survives
     assert cfg.num_salts == 4
 
 
 def test_engine_config_yaml_roundtrip(tmp_path):
+    """Every file key round-trips: a config with every knob off its
+    default survives to_dict → json/yaml file → from_file."""
+    from crawler_engine_spark.kernels.extract import ExtractOptions
+
+    cfg = CrawlConfig(
+        round_seconds=7.5, num_salts=3, bloom_partitions=5,
+        bloom_bits_per_segment=4096, mode="hybrid",
+        extract_opts=ExtractOptions(
+            relevance_threshold=0.3, min_content_length=7, remove_ads=False,
+            remove_navigation=False, enable_hidden_content_handling=False,
+            extract_tables=False, extract_lists=False, extract_forms=True,
+            extract_links=False, extract_images=True,
+        ),
+        trap_threshold=50, trap_keep_per_pattern=9, link_rank_budget=True,
+        link_rank_iterations=2, link_rank_focus=True, link_rank_every=3,
+    )
+    data, defaults = cfg.to_dict(), CrawlConfig().to_dict()
+    assert data.keys() == defaults.keys()
+    for section, keys in defaults.items():
+        assert data[section].keys() == keys.keys()
+        assert all(data[section][k] != v for k, v in keys.items()), section
+    json_file = tmp_path / "engine.json"
+    json_file.write_text(json.dumps(data))
+    assert CrawlConfig.from_file(str(json_file)) == cfg
     yaml = pytest.importorskip("yaml")
-    base = EngineConfig()
-    cfg_file = tmp_path / "engine.yaml"
-    cfg_file.write_text(yaml.safe_dump(base.to_dict()))
-    loaded = EngineConfig.from_file(str(cfg_file))
-    assert loaded == base
+    yaml_file = tmp_path / "engine.yaml"
+    yaml_file.write_text(yaml.safe_dump(data))
+    assert CrawlConfig.from_file(str(yaml_file)) == cfg
 
 
 def test_engine_config_rejects_unknown_suffix(tmp_path):
     p = tmp_path / "engine.toml"
     p.write_text("")
     with pytest.raises(ValueError, match="Unsupported configuration"):
-        EngineConfig.from_file(str(p))
+        CrawlConfig.from_file(str(p))
+
+
+# env var → the CrawlConfig field it sets (dotted: an ExtractOptions field)
+ENV_FIELDS = {
+    "INTELLIGENT_EXTRACTOR_STRATEGY": "mode",
+    "INTELLIGENT_EXTRACTOR_RELEVANCE_THRESHOLD": "extract_opts.relevance_threshold",
+    "INTELLIGENT_EXTRACTOR_MIN_CONTENT_LENGTH": "extract_opts.min_content_length",
+    "INTELLIGENT_EXTRACTOR_REMOVE_ADS": "extract_opts.remove_ads",
+    "INTELLIGENT_EXTRACTOR_REMOVE_NAVIGATION": "extract_opts.remove_navigation",
+    "INTELLIGENT_EXTRACTOR_ENABLE_HIDDEN_CONTENT": "extract_opts.enable_hidden_content_handling",
+    "INTELLIGENT_EXTRACTOR_EXTRACT_TABLES": "extract_opts.extract_tables",
+    "INTELLIGENT_EXTRACTOR_EXTRACT_LISTS": "extract_opts.extract_lists",
+    "INTELLIGENT_EXTRACTOR_EXTRACT_FORMS": "extract_opts.extract_forms",
+    "INTELLIGENT_EXTRACTOR_EXTRACT_LINKS": "extract_opts.extract_links",
+    "INTELLIGENT_EXTRACTOR_EXTRACT_IMAGES": "extract_opts.extract_images",
+    "CRAWL_ROUND_SECONDS": "round_seconds",
+    "CRAWL_NUM_SALTS": "num_salts",
+    "CRAWL_BLOOM_PARTITIONS": "bloom_partitions",
+    "CRAWL_BLOOM_BITS": "bloom_bits_per_segment",
+    "CRAWL_TRAP_THRESHOLD": "trap_threshold",
+    "CRAWL_TRAP_KEEP": "trap_keep_per_pattern",
+    "CRAWL_LINK_RANK": "link_rank_budget",
+    "CRAWL_LINK_RANK_ITERS": "link_rank_iterations",
+    "CRAWL_LINK_RANK_EVERY": "link_rank_every",
+    "CRAWL_LINK_RANK_FOCUS": "link_rank_focus",
+}
+
+
+def _flat_fields(cfg):
+    import dataclasses
+
+    out = {f.name: getattr(cfg, f.name) for f in dataclasses.fields(cfg)}
+    opts = out.pop("extract_opts")
+    for f in dataclasses.fields(opts):
+        out["extract_opts." + f.name] = getattr(opts, f.name)
+    return out
+
+
+def test_cli_init_env_matches_from_env(monkeypatch, tmp_path):
+    """`init --format env` sets exactly the vars from_env reads; loaded
+    back it gives the default config in adaptive mode, and each var
+    changes only its own field."""
+    out = tmp_path / "crawl.env"
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "crawl.py"), "init",
+         "--format", "env", "--out", str(out)],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    template = dict(
+        line.split("=", 1) for line in out.read_text().splitlines()
+        if line and not line.startswith("#")
+    )
+
+    class Recorder(dict):
+        def get(self, key, default=None):
+            self.read.add(key)
+            return super().get(key, default)
+
+        def __getitem__(self, key):
+            self.read.add(key)
+            return super().__getitem__(key)
+
+    env = Recorder()
+    env.read = set()
+    monkeypatch.setattr(os, "environ", env)
+    CrawlConfig.from_env()
+    assert set(template) == env.read == set(ENV_FIELDS)
+
+    for name, value in template.items():
+        env[name] = value
+    expected = CrawlConfig(mode="adaptive")
+    assert CrawlConfig.from_env() == expected
+    base = _flat_fields(expected)
+    for name, value in template.items():
+        if value in ("true", "false"):
+            other = {"true": "false", "false": "true"}[value]
+        elif name == "INTELLIGENT_EXTRACTOR_STRATEGY":
+            other = "semantic"
+        else:
+            other = str(type(base[ENV_FIELDS[name]])(value) + 3)
+        env[name] = other
+        got = _flat_fields(CrawlConfig.from_env())
+        env[name] = value
+        changed = {k for k in base if got[k] != base[k]}
+        assert changed == {ENV_FIELDS[name]}, name
 
 
 def test_cli_rule_parsing_handles_colons():
@@ -326,6 +435,58 @@ def test_cli_expire(spark, tmp_path):
     assert rec["expired"] == 3
     seen = {r["canonical_url"] for r in eng.seen().collect()}
     assert not (set(fetched) & seen)
+
+
+def test_cli_crawl_flag_file_env_precedence(spark, tmp_path):
+    """`crawl.py crawl` applies flag > file > env: the file's 4 bloom
+    partitions beat the env's 8, the env's CRAWL_LINK_RANK reaches the
+    engine, and --round-seconds 3 beats the file's 1000 (records equal an
+    in-process run at 3 s)."""
+    from crawler_engine_spark.frontier.rounds import CrawlEngine
+
+    pages = str(tmp_path / "pages")
+    gen.gen_pages_df(spark, 80, partitions=2).write.parquet(pages)
+    seeds = pd.DataFrame({"url": [gen.url_of(i) for i in range(0, 80, 2)]})
+    seeds["seed_rank"] = range(len(seeds))
+    seeds_csv = tmp_path / "seeds.csv"
+    seeds.to_csv(seeds_csv, index=False)
+    cfg_file = tmp_path / "crawl.json"
+    cfg_file.write_text(json.dumps({"crawl": {
+        "bloom_partitions": 4, "round_seconds": 1000,
+        "bloom_bits_per_segment": 1 << 14,
+    }}))
+    env = {k: v for k, v in os.environ.items() if k not in ENV_FIELDS}
+    env.update(CRAWL_BLOOM_PARTITIONS="8", CRAWL_LINK_RANK="true")
+    state = tmp_path / "state"
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "crawl.py"), "crawl",
+         "--pages", pages, "--seeds", str(seeds_csv), "--state", str(state),
+         "--rounds", "2", "--round-seconds", "3", "--config", str(cfg_file)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    cli = [json.loads(l) for l in proc.stdout.splitlines() if l.startswith("{")]
+    cli = [r for r in cli if "round" in r]
+    assert len(os.listdir(state / "rounds" / "round=1" / "bloom")) == 4
+    assert [r["link_rank_applied"] for r in cli] == [False, True]
+
+    robots = spark.createDataFrame(
+        [], "host string, disallow_prefixes array<string>, crawl_delay_s double"
+    )
+    eng = CrawlEngine(
+        spark, str(tmp_path / "state_in_process"), pages, robots,
+        CrawlConfig(round_seconds=3.0, bloom_partitions=4,
+                    bloom_bits_per_segment=1 << 14, link_rank_budget=True),
+    )
+    seeds["query"] = None
+    eng.init_from_seeds(spark.createDataFrame(
+        seeds, "url string, seed_rank int, query string"
+    ))
+    ours = eng.run(max_rounds=2)
+    # a 1000 s round would fetch all 40 seeds in round 1
+    assert ours[0]["fetched"] < len(seeds)
+    keys = ("fetched", "new_urls", "frontier_size")
+    assert [[r[k] for k in keys] for r in cli] == [[r[k] for k in keys] for r in ours]
 
 
 def test_cli_interactive(spark, tmp_path):
