@@ -287,23 +287,19 @@ def cmd_rank(args) -> None:
     optionally personalized to the crawl's round-0 seed hosts."""
     from pyspark.sql import functions as F
 
-    from crawler_engine_spark.frontier.rounds import host_edge_inputs
+    from crawler_engine_spark.frontier.rounds import (
+        committed_rounds,
+        host_edge_inputs,
+    )
     from crawler_engine_spark.operators import linkrank
 
-    spark = get_spark("crawl-rank")
-    root = os.path.join(args.state, "rounds")
-    committed = sorted(
-        int(d.split("=")[1])
-        for d in os.listdir(root)
-        if d.startswith("round=")
-        and os.path.exists(os.path.join(root, d, "_COMMIT"))
-    )
-    edge_dirs = host_edge_inputs(args.state, committed)
+    edge_dirs = host_edge_inputs(args.state, committed_rounds(args.state))
     if not edge_dirs:
         raise SystemExit(
             "rank: no host_edges under state "
             "(crawl with --link-rank-budget first)"
         )
+    spark = get_spark("crawl-rank")
     edges = spark.read.parquet(*edge_dirs)
     if args.hits:
         ranks = linkrank.hits(
@@ -314,7 +310,9 @@ def cmd_rank(args) -> None:
         teleport = None
         if args.focus_seeds:
             teleport = (
-                spark.read.parquet(os.path.join(root, "round=0", "frontier"))
+                spark.read.parquet(
+                    os.path.join(args.state, "rounds", "round=0", "frontier")
+                )
                 .select(F.col("host").alias("node"))
                 .distinct()
             )

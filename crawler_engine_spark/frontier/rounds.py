@@ -9,11 +9,12 @@ One crawl round is one DataFrame pipeline (north rule):
 
 State is checkpointed per round under ``state_dir/rounds/round=K/`` —
 frontier, results, seen-set delta (doubling as the fetched-order log),
-bloom segments, and per-partition lineage metrics — committed atomically by
-writing a ``_COMMIT`` marker last.  The commit record's row counts are
-``Observation``s on the frontier and seen-delta writes: no output is re-read
-to be counted.  Resume = continue from the highest committed round; an
-interrupted round leaves no marker and is recomputed idempotently
+bloom segments and per-host token-bucket state — committed atomically by
+writing a ``_COMMIT`` marker last.  The commit record's row counts and
+lineage totals (pages extracted, content chars, links found) are
+``Observation``s on the results, frontier and seen-delta writes: no output
+is re-read to be counted.  Resume = continue from the highest committed
+round; an interrupted round leaves no marker and is recomputed idempotently
 (overwrite-by-round-id).
 
 Scale notes (10^10-URL design point):
@@ -67,6 +68,42 @@ def _write_counted(df: DataFrame, path: str, **counts: Column) -> dict:
     aggs = [F.count(F.lit(1)).alias("n")] + [c.alias(k) for k, c in counts.items()]
     df.observe(obs, *aggs).write.mode("overwrite").parquet(path)
     return obs.get
+
+
+def _min_priority(df: DataFrame, carry: List[str]) -> DataFrame:
+    """One row per ``canonical_url``: the minimum of (PRIORITY_COLS,
+    *carry), so ``carry`` columns come from the winning row."""
+    fields = politeness.PRIORITY_COLS + carry
+    return (
+        df.groupBy("canonical_url")
+        .agg(F.min(F.struct(*fields)).alias("p"))
+        .select("canonical_url", *[F.col("p." + c).alias(c) for c in fields])
+    )
+
+
+def _with_url_keys(df: DataFrame) -> DataFrame:
+    """Add the frontier's ``url_hash``, ``host`` and ``path`` columns,
+    derived from ``canonical_url``."""
+    url = F.col("canonical_url")
+    return df.withColumns({
+        "url_hash": urlops.url_hash_col(url),
+        "host": urlops.host_col(url),
+        "path": urlops.path_col(url),
+    })
+
+
+def committed_rounds(state_dir: str) -> List[int]:
+    """Sorted ids of the rounds under ``state_dir`` that carry a
+    ``_COMMIT`` marker ([] when there is no ``rounds/`` dir)."""
+    root = os.path.join(state_dir, "rounds")
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        int(name.split("=")[1])
+        for name in os.listdir(root)
+        if name.startswith("round=")
+        and os.path.exists(os.path.join(root, name, "_COMMIT"))
+    )
 
 
 def compact_live(state_dir: str, name: str) -> "tuple[int, Optional[str]]":
@@ -166,16 +203,7 @@ class CrawlEngine:
         return os.path.join(self._round_dir(k), "_COMMIT")
 
     def committed_rounds(self) -> List[int]:
-        root = os.path.join(self.state_dir, "rounds")
-        if not os.path.isdir(root):
-            return []
-        out = []
-        for name in os.listdir(root):
-            if name.startswith("round="):
-                k = int(name.split("=")[1])
-                if os.path.exists(self._commit_path(k)):
-                    out.append(k)
-        return sorted(out)
+        return committed_rounds(self.state_dir)
 
     def last_committed(self) -> int:
         rounds = self.committed_rounds()
@@ -195,15 +223,13 @@ class CrawlEngine:
         then returns ``[]`` without committing round 1."""
         canon = urlops.canonical_url_col(F.col("url"))
         frontier = (
-            seeds.select(
-                canon.alias("canonical_url"),
-                F.col("seed_rank"),
-                F.col("query"),
+            _with_url_keys(
+                seeds.select(
+                    canon.alias("canonical_url"),
+                    F.col("seed_rank"),
+                    F.col("query"),
+                ).where(urlops.is_valid_url_col(F.col("canonical_url")))
             )
-            .where(urlops.is_valid_url_col(F.col("canonical_url")))
-            .withColumn("url_hash", urlops.url_hash_col(F.col("canonical_url")))
-            .withColumn("host", urlops.host_col(F.col("canonical_url")))
-            .withColumn("path", urlops.path_col(F.col("canonical_url")))
             .withColumn("depth", F.lit(0))
             .withColumn("parent_seq", F.lit(-1).cast("long"))
             .withColumn("link_position", F.col("seed_rank").cast("int"))
@@ -502,27 +528,9 @@ class CrawlEngine:
             )
             # fold into the frontier, min-priority per URL (a URL can be
             # both carried and requeued)
-            frontier = (
-                frontier.unionByName(rq)
-                .groupBy("canonical_url")
-                .agg(
-                    F.min(
-                        F.struct(
-                            "depth", "parent_seq", "link_position",
-                            "url_hash", "host", "path", "query",
-                        )
-                    ).alias("p")
-                )
-                .select(
-                    "canonical_url",
-                    F.col("p.url_hash").alias("url_hash"),
-                    F.col("p.host").alias("host"),
-                    F.col("p.path").alias("path"),
-                    F.col("p.depth").alias("depth"),
-                    F.col("p.parent_seq").alias("parent_seq"),
-                    F.col("p.link_position").alias("link_position"),
-                    F.col("p.query").alias("query"),
-                )
+            frontier = _min_priority(
+                frontier.unionByName(rq),
+                carry=["url_hash", "host", "path", "query"],
             )
 
         rd = self._round_dir(k)
@@ -537,10 +545,11 @@ class CrawlEngine:
             if os.path.isdir(prev_tokens_path)
             else None
         )
-        # Persisted: three consumers (blocked paths, politeness selection,
-        # token accounting) would otherwise each recompute the scan + join.
-        # At the 10^10 design point this spills MEMORY_AND_DISK per executor
-        # rather than re-reading the frontier from storage three times.
+        # Persisted: its consumers (the blocked rows, the politeness
+        # selection and its remainder) would otherwise each recompute the
+        # scan + join.  At the 10^10 design point this spills
+        # MEMORY_AND_DISK per executor rather than re-reading the frontier
+        # from storage once per consumer.
         gated = politeness.apply_robots(
             frontier, self.robots, self.cfg.round_seconds,
             host_tokens=prev_tokens, burst_rounds=self.cfg.burst_rounds,
@@ -624,8 +633,7 @@ class CrawlEngine:
             # batch, which errs on the sparse/memory-safe side.
             est_batch_rows=int(prev.get("fetched", 0))
             or int(prev.get("frontier_size", 0)),
-        ).cache()
-        caches.register(selected)
+        )
 
         # 3. fetch-simulate (J2): left join against the page store
         pages = self.spark.read.parquet(self.pages_path).select("url", "html")
@@ -648,70 +656,51 @@ class CrawlEngine:
             opts=self.cfg.extract_opts,
             passthrough=["fetch_seq", "depth"],
         )
-        results.write.mode("overwrite").parquet(os.path.join(rd, "results"))
+        # lineage totals (A8) observed on the results write itself: exact
+        # integer sums, so the record is the same under any partitioning
+        extracted = _write_counted(
+            results, os.path.join(rd, "results"),
+            content_chars=F.coalesce(F.sum(F.length("content")), F.lit(0)),
+            links_found=F.coalesce(F.sum(F.size("out_links")), F.lit(0)),
+        )
         results = self.spark.read.parquet(os.path.join(rd, "results"))
 
-        # 5. discovered links → candidates (explode, canonicalize, prioritize)
-        exploded = results.select(
-            "fetch_seq",
-            "depth",
-            F.posexplode("out_links").alias("link_position", "raw_url"),
-        )
-        cand = (
-            exploded.withColumn("canonical_url", urlops.canonical_url_col(F.col("raw_url")))
+        # 5. discovered links, canonicalized and validated once for both
+        # the candidates and the host-graph delta
+        links = (
+            results.select(
+                "url",
+                "fetch_seq",
+                "depth",
+                F.posexplode("out_links").alias("link_position", "raw_url"),
+            )
+            .withColumn("canonical_url", urlops.canonical_url_col(F.col("raw_url")))
             .where(urlops.is_valid_url_col(F.col("canonical_url")))
-            .where(F.col("canonical_url").rlike("^https?://"))
-            .select(
-                "canonical_url",
-                (F.col("depth") + 1).alias("depth"),
-                F.col("fetch_seq").alias("parent_seq"),
-                F.col("link_position").cast("int"),
-            )
         )
-        # in-round dedup: keep the minimum priority per canonical URL
-        cand = (
-            cand.groupBy("canonical_url")
-            .agg(
-                F.min(F.struct("depth", "parent_seq", "link_position")).alias("p")
+        # candidates: in-round dedup keeps the minimum priority per URL
+        cand = _with_url_keys(
+            _min_priority(
+                links.where(F.col("canonical_url").rlike("^https?://")).select(
+                    "canonical_url",
+                    (F.col("depth") + 1).alias("depth"),
+                    F.col("fetch_seq").alias("parent_seq"),
+                    F.col("link_position").cast("int"),
+                ),
+                carry=[],
             )
-            .select(
-                "canonical_url",
-                F.col("p.depth").alias("depth"),
-                F.col("p.parent_seq").alias("parent_seq"),
-                F.col("p.link_position").alias("link_position"),
-            )
-            .withColumn("url_hash", urlops.url_hash_col(F.col("canonical_url")))
-            .withColumn("host", urlops.host_col(F.col("canonical_url")))
-            .withColumn("path", urlops.path_col(F.col("canonical_url")))
-            .withColumn("query", F.lit(None).cast("string"))
-        )
+        ).withColumn("query", F.lit(None).cast("string"))
 
         # 5b. host-graph delta for the link-rank feedback: distinct
-        # src_host→dst_host pairs discovered this round.  Derived from the
-        # SAME exploded links as the candidates but before their in-round
-        # min-priority dedup (which keeps one parent per URL and would drop
-        # cross-host co-citations); `selected` is the cached batch, so the
-        # fetch_seq→host join adds no new scan, and the distinct output is
-        # host²-bounded — tiny next to the results write it derives from.
+        # src_host→dst_host pairs discovered this round.  Taken from the
+        # links before the candidates' in-round dedup (which keeps one
+        # parent per URL and would drop cross-host co-citations); each
+        # results row carries its own URL, so src_host needs no join, and
+        # the distinct output is host²-bounded.
         if self.cfg.link_rank_budget:
-            host_edges = (
-                exploded.withColumn(
-                    "_c", urlops.canonical_url_col(F.col("raw_url"))
-                )
-                .where(urlops.is_valid_url_col(F.col("_c")))
-                .select(
-                    "fetch_seq", urlops.host_col(F.col("_c")).alias("dst_host")
-                )
-                .join(
-                    selected.select(
-                        "fetch_seq", F.col("host").alias("src_host")
-                    ),
-                    "fetch_seq",
-                )
-                .select("src_host", "dst_host")
-                .distinct()
-            )
-            host_edges.write.mode("overwrite").parquet(
+            links.select(
+                urlops.host_col(F.col("url")).alias("src_host"),
+                urlops.host_col(F.col("canonical_url")).alias("dst_host"),
+            ).distinct().write.mode("overwrite").parquet(
                 os.path.join(rd, "host_edges")
             )
 
@@ -815,35 +804,14 @@ class CrawlEngine:
             out_dir=os.path.join(rd, "bloom"),
         )
 
-        # 10. token-bucket state for round k: per eligible host,
-        #     available - used (hosts absent from the frontier drop out and
-        #     restart at one refill when rediscovered)
-        host_avail = eligible.select("host", "tokens_available").distinct()
-        used = batch.groupBy("host").agg(F.count("*").alias("_used"))
-        new_tokens = (
-            host_avail.join(used, on="host", how="left")
-            .select(
-                "host",
-                (
-                    F.col("tokens_available")
-                    - F.coalesce(F.col("_used"), F.lit(0))
-                ).alias("tokens"),
-            )
-        )
-        new_tokens.write.mode("overwrite").parquet(os.path.join(rd, "host_tokens"))
-
-        # 11. per-partition lineage metrics (A8 / north-rule requirement)
-        metrics = (
-            results.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(
-                F.count("*").alias("pages_extracted"),
-                F.sum(F.length("content")).alias("content_chars"),
-                F.sum(F.size("out_links")).alias("links_found"),
-                F.avg("confidence_score").alias("avg_confidence"),
-            )
-            .withColumn("round", F.lit(k))
-        )
-        metrics.write.mode("overwrite").parquet(os.path.join(rd, "metrics"))
+        # 10. token-bucket state for round k: per eligible host, available
+        #     - used.  Every eligible host has a batch row (its budget is
+        #     ≥ 1), and tokens_available is per host, so one aggregate over
+        #     the batch covers them (hosts absent from the frontier drop
+        #     out and restart at one refill when rediscovered)
+        batch.groupBy("host").agg(
+            (F.max("tokens_available") - F.count(F.lit(1))).alias("tokens")
+        ).write.mode("overwrite").parquet(os.path.join(rd, "host_tokens"))
 
         n_fetched = attempted["n"] - attempted["blocked"]
         record = {
@@ -853,6 +821,9 @@ class CrawlEngine:
             "new_urls": written["discovered"],
             "frontier_size": written["n"],
             "total_fetched": int(prev["total_fetched"]) + n_fetched,
+            "pages_extracted": extracted["n"],
+            "content_chars": extracted["content_chars"],
+            "links_found": extracted["links_found"],
             # requeue batches folded into this round's frontier; recording
             # them here (atomically with the round) is what makes expire()
             # crash-safe — an uncommitted round simply re-consumes them
@@ -868,8 +839,8 @@ class CrawlEngine:
             "link_rank_recomputed": link_rank_recomputed,
         }
         # drain the session registry: the round's own persists (gated /
-        # selected / batch / flagged, registered at creation so a round
-        # that raises mid-flight leaves them drainable too),
+        # batch / flagged, registered at creation so a round that raises
+        # mid-flight leaves them drainable too),
         # global_fetch_sequence's arranged projection, and any other
         # intra-round hand-off must not outlive the round — a long crawl
         # would otherwise strand one batch-sized cache per round.  Round
@@ -877,7 +848,7 @@ class CrawlEngine:
         # on disk, and registered caches are recomputable persists,
         # never cuts.
         caches.release_all()
-        # 12. atomic commit marker — written LAST
+        # 11. atomic commit marker — written LAST
         with open(self._commit_path(k), "w") as f:
             json.dump(record, f)
         return record

@@ -189,7 +189,9 @@ def _row_to_flat(rec: dict) -> dict:
     }
 
 
-def _decode_html(value) -> str:
+def decode_html(value) -> str:
+    """Page text of a stored ``html`` value (bytes are decoded as UTF-8,
+    undecodable bytes replaced; None is the empty page)."""
     if value is None:
         return ""
     if isinstance(value, (bytes, bytearray)):
@@ -230,7 +232,7 @@ def extract_pages(
                 row_query = queries.iloc[i] if queries is not None else None
                 rec = extract_page(
                     url=pdf["url"].iloc[i],
-                    html=_decode_html(pdf["html"].iloc[i]),
+                    html=decode_html(pdf["html"].iloc[i]),
                     user_query=row_query if row_query is not None else query,
                     mode=row_mode if row_mode is not None else mode,
                     opts=opts,

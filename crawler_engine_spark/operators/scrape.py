@@ -8,20 +8,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..kernels.scrape import scrape_page_metadata
+from .extraction import decode_html
 
 SCRAPE_SCHEMA = (
     "url string, title string, meta_tags map<string,string>, "
     "ld_json array<string>, char_count int, word_count int, "
     "link_count int, image_count int, script_count int"
 )
-
-
-def _decode(value) -> str:
-    if value is None:
-        return ""
-    if isinstance(value, (bytes, bytearray)):
-        return bytes(value).decode("utf-8", errors="replace")
-    return str(value)
 
 
 def scrape_metadata(pages: DataFrame) -> DataFrame:
@@ -31,7 +24,7 @@ def scrape_metadata(pages: DataFrame) -> DataFrame:
         for pdf in batches:
             out = []
             for url, html in zip(pdf["url"], pdf["html"]):
-                rec = scrape_page_metadata(_decode(html))
+                rec = scrape_page_metadata(decode_html(html))
                 rec["url"] = url
                 out.append(rec)
             yield pd.DataFrame(out)

@@ -94,7 +94,7 @@ def engine_run(spark, world):
 
 def test_round_commit_drains_cache_registry(engine_run):
     """r05 review follow-up: rounds register their intra-round persists
-    (gated / selected / batch / flagged) in the session registry; the
+    (gated / batch / flagged) in the session registry; the
     round-commit cleanup must drain it, or a long crawl strands several
     batch-sized caches per round."""
     from crawler_engine_spark import caches
@@ -117,9 +117,14 @@ def test_seed_commit_records_frontier_size(engine_run):
 
 
 def _recount(spark, eng, k):
-    """The commit-record counts of round ``k``, recounted from the files
-    the round wrote."""
+    """The commit-record counts and lineage totals of round ``k``,
+    recounted from the files the round wrote."""
     rd = eng._round_dir(k)
+    lineage = spark.read.parquet(os.path.join(rd, "results")).agg(
+        F.count(F.lit(1)).alias("pages_extracted"),
+        F.coalesce(F.sum(F.length("content")), F.lit(0)).alias("content_chars"),
+        F.coalesce(F.sum(F.size("out_links")), F.lit(0)).alias("links_found"),
+    ).first().asDict()
     status = {
         r["fetch_status"]: r["count"]
         for r in spark.read.parquet(os.path.join(rd, "seen_delta"))
@@ -136,6 +141,7 @@ def _recount(spark, eng, k):
         "blocked": blocked,
         "new_urls": origin.get("discovered", 0),
         "frontier_size": sum(origin.values()),
+        **lineage,
     }
 
 
@@ -143,7 +149,8 @@ def test_commit_counts_match_written_files(spark, world):
     """Value lock on the observed commit counts: with robots blocks, the
     trap guard pruning the frontier before its write, and an expire()
     requeue round, every commit's counts equal a recount of the round's
-    written seen_delta/ and frontier/ files."""
+    written seen_delta/, frontier/ and results/ files, and each round dir
+    holds only the round's outputs and its commit marker."""
     eng = _make_engine(
         spark, world, "state_counts",
         CrawlConfig(round_seconds=ROUND_SECONDS, bloom_partitions=8,
@@ -166,10 +173,15 @@ def test_commit_counts_match_written_files(spark, world):
         total += want["fetched"]
         assert {key: rec[key] for key in want} == want, rec["round"]
         assert rec["total_fetched"] == total
+        assert sorted(os.listdir(eng._round_dir(rec["round"]))) == [
+            "_COMMIT", "bloom", "frontier", "host_tokens", "results",
+            "seen_delta",
+        ]
     # the paths the test exists for were all taken
     assert any(rec["blocked"] for rec in records)
     assert any(rec["trap_patterns"] for rec in records)
     assert any(rec["consumed_requeue"] for rec in records)
+    assert any(rec["links_found"] for rec in records)
 
 
 @pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
@@ -1159,6 +1171,22 @@ def test_cli_rank_reads_edge_compaction_plus_tail(spark, tmp_path):
     assert rec["edge_inputs"] == 2  # edges_compact.old/data + round 3's delta
     got = {r["node"]: r["rank_micro"] for r in spark.read.parquet(out).collect()}
     assert got == want
+
+
+def test_cli_rank_without_rounds_exits_with_message(tmp_path):
+    """``crawl.py rank`` on a state dir with no ``rounds/`` exits with the
+    "no host_edges" message, not a FileNotFoundError traceback (the round
+    listing runs before any Spark session starts)."""
+    proc = subprocess.run(
+        [sys.executable, os.path.join(os.path.dirname(os.path.dirname(
+            os.path.abspath(__file__))), "crawl.py"), "rank",
+         "--state", str(tmp_path), "--out", str(tmp_path / "ranks")],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 1
+    assert "rank: no host_edges under state" in proc.stderr
+    assert "Traceback" not in proc.stderr, proc.stderr[-2000:]
+    assert not os.path.exists(tmp_path / "ranks")
 
 
 def test_engine_link_rank_cadence_reuses_rank_table(spark, tmp_path):

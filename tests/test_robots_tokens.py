@@ -123,6 +123,63 @@ def test_burst_token_bucket_matches_oracle(spark, tmp_path):
     assert [(f.round, f.url) for f in sim_log] != [(f.round, f.url) for f in sim_log_b1]
 
 
+def test_host_tokens_value_lock(spark, tmp_path):
+    """Each committed round's host_tokens/ equals the token-bucket rule
+    recomputed from its inputs: per host fetched (or missed) in round k,
+    min(burst·refill, tokens(k−1) + refill) − used(k), with refill from
+    the robots table, tokens(k−1) from round k−1's host_tokens/ (0 when
+    absent) and used(k) from round k's non-blocked seen_delta/ rows.  One
+    host's crawl delay exceeds round_seconds, so its ≥1 budget floor runs
+    the bucket into debt; burst_rounds=2 lets under-used hosts carry."""
+    from crawler_engine_spark.frontier.politeness import DEFAULT_CRAWL_DELAY_S
+
+    pages_path = str(tmp_path / "pages")
+    gen.gen_pages_df(spark, N_DOCS, partitions=4).write.parquet(pages_path)
+    robots_rows = gen.gen_robots()
+    robots_rows[1]["crawl_delay_s"] = 2 * ROUND_SECONDS
+    delay = {r["host"]: r["crawl_delay_s"] for r in robots_rows}
+    robots_df = spark.createDataFrame(
+        pd.DataFrame(robots_rows),
+        "host string, disallow_prefixes array<string>, crawl_delay_s double",
+    )
+    eng = CrawlEngine(
+        spark, str(tmp_path / "state"), pages_path, robots_df,
+        CrawlConfig(round_seconds=ROUND_SECONDS, bloom_partitions=8,
+                    bloom_bits_per_segment=1 << 16, burst_rounds=2),
+    )
+    eng.init_from_seeds(spark.createDataFrame(
+        pd.DataFrame(gen.gen_seeds(N_DOCS, n_seeds=6)),
+        "url string, seed_rank int, query string",
+    ))
+    assert len(eng.run(max_rounds=4)) == 4
+
+    def tokens(k):
+        d = os.path.join(eng._round_dir(k), "host_tokens")
+        if not os.path.isdir(d):
+            return {}
+        return {r["host"]: r["tokens"] for r in spark.read.parquet(d).collect()}
+
+    values, carried = [], []
+    for k in eng.committed_rounds()[1:]:
+        prev = tokens(k - 1)
+        used = {
+            r["host"]: r["count"]
+            for r in spark.read.parquet(
+                os.path.join(eng._round_dir(k), "seen_delta")
+            ).where("fetch_status != 'robots_blocked'").groupBy("host").count()
+            .collect()
+        }
+        want = {}
+        for host, n in used.items():
+            refill = ROUND_SECONDS / max(delay.get(host, DEFAULT_CRAWL_DELAY_S), 1e-9)
+            want[host] = min(2.0 * refill, prev.get(host, 0.0) + refill) - n
+        assert tokens(k) == want, k
+        values += want.values()
+        carried += [prev[h] for h in used if prev.get(h, 0.0) > 0]
+    assert min(values) < 0  # the debt path
+    assert carried  # the burst carry path
+
+
 def test_robots_decisions_agree_with_stdlib_robotparser():
     """For the wildcard-free subset the engine models (plain Disallow
     prefixes, single group), our any-prefix-blocks decision must agree with
