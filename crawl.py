@@ -84,6 +84,7 @@ def cmd_scrape(args) -> None:
 def cmd_crawl(args) -> None:
     import pandas as pd
 
+    from crawler_engine_spark.frontier.robots_cache import ROBOTS_SCHEMA
     from crawler_engine_spark.frontier.rounds import CrawlEngine
 
     flags = {
@@ -102,9 +103,7 @@ def cmd_crawl(args) -> None:
     if args.robots:
         robots = spark.read.parquet(args.robots)
     else:
-        robots = spark.createDataFrame(
-            [], "host string, disallow_prefixes array<string>, crawl_delay_s double"
-        )
+        robots = spark.createDataFrame([], ROBOTS_SCHEMA)
     engine = CrawlEngine(
         spark, state_dir=args.state, pages_path=args.pages, robots=robots, config=cfg
     )
@@ -146,12 +145,11 @@ def cmd_crawl(args) -> None:
 def cmd_expire(args) -> None:
     """Recrawl/TTL surface: expire URLs in a crawl state so the next
     `crawl` run fetches them again (tombstone + requeue)."""
+    from crawler_engine_spark.frontier.robots_cache import ROBOTS_SCHEMA
     from crawler_engine_spark.frontier.rounds import CrawlEngine
 
     spark = get_spark("crawl-expire")
-    robots = spark.createDataFrame(
-        [], "host string, disallow_prefixes array<string>, crawl_delay_s double"
-    )
+    robots = spark.createDataFrame([], ROBOTS_SCHEMA)
     eng = CrawlEngine(spark, args.state, args.pages, robots, CrawlConfig())
     if args.urls.endswith(".txt"):
         with open(args.urls) as f:
@@ -289,18 +287,22 @@ def cmd_rank(args) -> None:
 
     from crawler_engine_spark.frontier.rounds import (
         committed_rounds,
+        edge_rounds,
         host_edge_inputs,
+        read_rounds,
     )
     from crawler_engine_spark.operators import linkrank
 
-    edge_dirs = host_edge_inputs(args.state, committed_rounds(args.state))
+    committed = committed_rounds(args.state)
+    edge_dirs = host_edge_inputs(args.state, committed)
     if not edge_dirs:
         raise SystemExit(
             "rank: no host_edges under state "
             "(crawl with --link-rank-budget first)"
         )
     spark = get_spark("crawl-rank")
-    edges = spark.read.parquet(*edge_dirs)
+    edges = read_rounds(spark, args.state, "host_edges",
+                        *edge_rounds(args.state, committed))
     if args.hits:
         ranks = linkrank.hits(
             edges, src_col="src_host", dst_col="dst_host",
@@ -310,9 +312,7 @@ def cmd_rank(args) -> None:
         teleport = None
         if args.focus_seeds:
             teleport = (
-                spark.read.parquet(
-                    os.path.join(args.state, "rounds", "round=0", "frontier")
-                )
+                read_rounds(spark, args.state, "frontier", [0])
                 .select(F.col("host").alias("node"))
                 .distinct()
             )

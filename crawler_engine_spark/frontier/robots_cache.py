@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.robots import parse_robots_txt
 from ..operators import urlops
+from ..operators.extraction import decode_html
 
 ROBOTS_SCHEMA = "host string, disallow_prefixes array<string>, crawl_delay_s double"
 
@@ -34,12 +35,9 @@ def build_robots_table(
         for pdf in batches:
             rows = []
             for host, html in zip(pdf["host"], pdf["html"]):
-                body = (
-                    bytes(html).decode("utf-8", errors="replace")
-                    if html is not None
-                    else ""
+                rec = parse_robots_txt(
+                    decode_html(html), agent, default_crawl_delay
                 )
-                rec = parse_robots_txt(body, agent, default_crawl_delay)
                 rows.append(
                     {
                         "host": host,

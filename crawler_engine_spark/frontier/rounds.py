@@ -38,15 +38,17 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import cached_property
 from typing import List, Optional
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import caches
 from ..config import CrawlConfig
 from ..operators import urlops
-from ..operators.extraction import extract_pages
+from ..operators.extraction import EXTRACTION_SCHEMA, extract_pages
 from . import politeness, traps
 from .bloom import BloomSeenSet
 
@@ -54,6 +56,25 @@ FRONTIER_SCHEMA = (
     "canonical_url string, url_hash long, host string, path string, "
     "depth int, parent_seq long, link_position int, query string"
 )
+
+# The schema of each per-round artifact under ``rounds/round=K/``; the
+# seen and edge compactions hold ``seen_delta`` and ``host_edges`` rows.
+# Every read of them goes through :func:`read_rounds` with these, so none
+# runs a schema-inference job.
+ROUND_SCHEMAS = {
+    "frontier": FRONTIER_SCHEMA,
+    "seen_delta": (
+        "canonical_url string, url_hash long, host string, fetch_seq long, "
+        "depth int, fetch_status string, round int, was_new boolean"
+    ),
+    "results": T.StructType(EXTRACTION_SCHEMA.fields + [
+        T.StructField("fetch_seq", T.LongType()),
+        T.StructField("depth", T.IntegerType()),
+    ]),
+    "host_tokens": "host string, tokens double",
+    "host_edges": "src_host string, dst_host string",
+    "host_ranks": "host string, rank_micro long",
+}
 
 # Checkpoint layout version, stamped into the round-0 commit record.  Bump
 # when the on-disk layout changes incompatibly (v2: seen_delta carries the
@@ -127,20 +148,41 @@ def compact_live(state_dir: str, name: str) -> "tuple[int, Optional[str]]":
     return -1, None
 
 
-def host_edge_inputs(state_dir: str, committed: List[int]) -> List[str]:
-    """Edge dirs for a link-rank recompute over the ``committed`` rounds:
-    the committed edge compaction (if any) plus only the per-round
-    ``host_edges`` deltas after it.  Duplicate pairs across compact and
-    tail are harmless — pagerank distincts edges."""
-    upto, base = compact_live(state_dir, "edges_compact")
-    tail = [
+def round_dirs(state_dir: str, name: str, rounds: List[int],
+               base: Optional[str] = None) -> List[str]:
+    """The compaction data dir ``base`` (if given) plus the ``name`` dirs
+    of those ``rounds`` that wrote one."""
+    return ([base] if base else []) + [
         d
-        for j in committed
-        if j > upto
-        for d in [os.path.join(state_dir, "rounds", f"round={j}", "host_edges")]
+        for k in rounds
+        for d in [os.path.join(state_dir, "rounds", f"round={k}", name)]
         if os.path.isdir(d)
     ]
-    return ([base] if base else []) + tail
+
+
+def read_rounds(spark: SparkSession, state_dir: str, name: str,
+                rounds: List[int], base: Optional[str] = None
+                ) -> Optional[DataFrame]:
+    """The artifact ``name`` of ``rounds`` (plus the compaction ``base``)
+    as one DataFrame read with ``ROUND_SCHEMAS[name]``; None when none of
+    them exists."""
+    dirs = round_dirs(state_dir, name, rounds, base)
+    return spark.read.schema(ROUND_SCHEMAS[name]).parquet(*dirs) if dirs else None
+
+
+def edge_rounds(state_dir: str, committed: List[int]
+                ) -> "tuple[List[int], Optional[str]]":
+    """(rounds, base) of a link-rank read over the ``committed`` rounds:
+    the committed edge compaction's data dir (if any) and only the rounds
+    after it.  Duplicate pairs across compact and tail are harmless —
+    pagerank distincts edges."""
+    upto, base = compact_live(state_dir, "edges_compact")
+    return [j for j in committed if j > upto], base
+
+
+def host_edge_inputs(state_dir: str, committed: List[int]) -> List[str]:
+    """Edge dirs a link-rank read over the ``committed`` rounds scans."""
+    return round_dirs(state_dir, "host_edges", *edge_rounds(state_dir, committed))
 
 
 class CrawlEngine:
@@ -213,6 +255,16 @@ class CrawlEngine:
         with open(self._commit_path(k)) as f:
             return json.load(f)
 
+    def _read(self, name: str, rounds: List[int],
+              base: Optional[str] = None) -> Optional[DataFrame]:
+        return read_rounds(self.spark, self.state_dir, name, rounds, base)
+
+    @cached_property
+    def _pages(self) -> DataFrame:
+        """The page store (static for the engine's life): its schema is
+        inferred once, on first use, not once per round."""
+        return self.spark.read.parquet(self.pages_path).select("url", "html")
+
     # -------------------------------------------------------------- seeds
     def init_from_seeds(self, seeds: DataFrame) -> None:
         """Round 0: seed frontier.  ``seeds`` columns: url, seed_rank, query.
@@ -250,9 +302,7 @@ class CrawlEngine:
 
     # -------------------------------------------------------------- round
     def _read_frontier(self, k: int) -> DataFrame:
-        return self.spark.read.schema(FRONTIER_SCHEMA).parquet(
-            os.path.join(self._round_dir(k), "frontier")
-        )
+        return self._read("frontier", [k])
 
     def _read_seen(self, upto_round: int) -> Optional[DataFrame]:
         """Exact seen set ≤ upto_round: the compacted base (if one covers a
@@ -261,23 +311,14 @@ class CrawlEngine:
         parquet dir per round — file-listing and small-file read
         amplification that grows linearly with crawl length; with it, the
         union is one consolidated dir + a bounded tail."""
-        c, data = compact_live(self.state_dir, "seen_compact")
-        base = None
-        start = 1
-        if data is not None and c <= upto_round:
-            base = self.spark.read.parquet(data)
-            start = c + 1
-        paths = [
-            os.path.join(self._round_dir(k), "seen_delta")
-            for k in self.committed_rounds()
-            if start <= k <= upto_round
-            and os.path.isdir(os.path.join(self._round_dir(k), "seen_delta"))
-        ]
-        if not paths:
-            seen = base
-        else:
-            deltas = self.spark.read.parquet(*paths)
-            seen = deltas if base is None else base.unionByName(deltas)
+        c, base = compact_live(self.state_dir, "seen_compact")
+        if c > upto_round:
+            c, base = -1, None
+        seen = self._read(
+            "seen_delta",
+            [k for k in self.committed_rounds() if c < k <= upto_round],
+            base,
+        )
         if seen is None:
             return None
         tomb = self._read_tombstones()
@@ -399,16 +440,13 @@ class CrawlEngine:
             .parquet(t_tmp)
         )
         if requeue:
-            rq = records.select(
+            rq = _with_url_keys(records.select(
                 "canonical_url",
-                "url_hash",
-                "host",
-                urlops.path_col(F.col("canonical_url")).alias("path"),
                 F.col("depth").cast("int"),
                 F.coalesce(F.col("fetch_seq"), F.lit(-1)).cast("long").alias("parent_seq"),
                 F.lit(0).alias("link_position"),
                 F.lit(None).cast("string").alias("query"),
-            )
+            ))
             rq_tmp = os.path.join(self._requeue_dir(), batch + ".tmp")
             rq.write.mode("overwrite").parquet(rq_tmp)
             os.rename(rq_tmp, os.path.join(self._requeue_dir(), batch))
@@ -495,14 +533,12 @@ class CrawlEngine:
         prev = self.edges_compacted_upto()
         if upto <= prev:
             return prev
-        dirs = host_edge_inputs(
+        edges = self._read("host_edges", *edge_rounds(
             self.state_dir, [j for j in self.committed_rounds() if j <= upto]
-        )
-        if not dirs:
+        ))
+        if edges is None:
             return prev
-        return self._compact(
-            "edges_compact", upto, self.spark.read.parquet(*dirs).distinct()
-        )
+        return self._compact("edges_compact", upto, edges.distinct())
 
     def run_round(self, k: int) -> Optional[dict]:
         """Execute round ``k`` (requires round ``k-1`` committed).
@@ -539,12 +575,7 @@ class CrawlEngine:
         os.makedirs(rd, exist_ok=True)
 
         # 1. robots gate (broadcast join, J3) + token-bucket state (W5)
-        prev_tokens_path = os.path.join(self._round_dir(k - 1), "host_tokens")
-        prev_tokens = (
-            self.spark.read.parquet(prev_tokens_path)
-            if os.path.isdir(prev_tokens_path)
-            else None
-        )
+        prev_tokens = self._read("host_tokens", [k - 1])
         # Persisted: its consumers (the blocked rows, the politeness
         # selection and its remainder) would otherwise each recompute the
         # scan + join.  At the 10^10 design point this spills
@@ -578,20 +609,17 @@ class CrawlEngine:
             committed = self.committed_rounds()
             # rerank cadence is derived purely from the on-disk layout (the
             # latest committed round that wrote a rank table) — resume-safe,
-            # and an uncommitted crash rewinds it with the round itself
-            ranked = [
-                j
-                for j in committed
-                if os.path.isdir(os.path.join(self._round_dir(j), "host_ranks"))
-            ]
-            ranks = None
-            if ranked and k - ranked[-1] < self.cfg.link_rank_every:
-                ranks = self.spark.read.parquet(
-                    os.path.join(self._round_dir(ranked[-1]), "host_ranks")
+            # and an uncommitted crash rewinds it with the round itself.
+            # ``ranked`` is the round whose table this round applies: that
+            # one, or this round once it reranks, or none.
+            ranked = [j for j in committed
+                      if round_dirs(self.state_dir, "host_ranks", [j])][-1:]
+            if not ranked or k - ranked[0] >= self.cfg.link_rank_every:
+                ranked = []
+                edges = self._read(
+                    "host_edges", *edge_rounds(self.state_dir, committed)
                 )
-            else:
-                edge_dirs = host_edge_inputs(self.state_dir, committed)
-                if edge_dirs:
+                if edges is not None:
                     teleport = (
                         self._read_frontier(0).select(
                             F.col("host").alias("node")
@@ -600,7 +628,7 @@ class CrawlEngine:
                         else None
                     )
                     linkrank.pagerank(
-                        self.spark.read.parquet(*edge_dirs),
+                        edges,
                         src_col="src_host",
                         dst_col="dst_host",
                         iterations=self.cfg.link_rank_iterations,
@@ -611,10 +639,9 @@ class CrawlEngine:
                     ).write.mode("overwrite").parquet(
                         os.path.join(rd, "host_ranks")
                     )
-                    ranks = self.spark.read.parquet(
-                        os.path.join(rd, "host_ranks")
-                    )
+                    ranked = [k]
                     link_rank_recomputed = True
+            ranks = self._read("host_ranks", ranked)
             if ranks is not None:
                 eligible = linkrank.apply_link_rank(eligible, ranks)
                 link_rank_applied = True
@@ -636,9 +663,8 @@ class CrawlEngine:
         )
 
         # 3. fetch-simulate (J2): left join against the page store
-        pages = self.spark.read.parquet(self.pages_path).select("url", "html")
         batch = selected.join(
-            pages, selected.canonical_url == pages.url, how="left"
+            self._pages, selected.canonical_url == self._pages.url, how="left"
         ).drop("url")
         batch = batch.withColumn(
             "fetch_status", F.when(F.col("html").isNotNull(), "ok").otherwise("miss")
@@ -663,7 +689,7 @@ class CrawlEngine:
             content_chars=F.coalesce(F.sum(F.length("content")), F.lit(0)),
             links_found=F.coalesce(F.sum(F.size("out_links")), F.lit(0)),
         )
-        results = self.spark.read.parquet(os.path.join(rd, "results"))
+        results = self._read("results", [k])
 
         # 5. discovered links, canonicalized and validated once for both
         # the candidates and the host-graph delta
@@ -795,7 +821,7 @@ class CrawlEngine:
             seen_delta, os.path.join(rd, "seen_delta"),
             blocked=F.count_if(F.col("fetch_status") == "robots_blocked"),
         )
-        seen_delta = self.spark.read.parquet(os.path.join(rd, "seen_delta"))
+        seen_delta = self._read("seen_delta", [k])
 
         # 9. bloom segments for round k (executor-side, one file per task)
         self.bloom.update(
@@ -881,25 +907,15 @@ class CrawlEngine:
     def fetched_log(self) -> DataFrame:
         """Fetched-order log (golden_crawl comparison surface) — a
         filter/projection of the per-round seen deltas."""
-        paths = [
-            os.path.join(self._round_dir(k), "seen_delta")
-            for k in self.committed_rounds()
-            if k > 0
-        ]
         return (
-            self.spark.read.parquet(*paths)
+            self._read("seen_delta", self.committed_rounds())
             .where(F.col("fetch_status") != "robots_blocked")
             .select("round", "fetch_seq", "canonical_url", "host",
                     "fetch_status", "depth")
         )
 
     def results(self) -> DataFrame:
-        paths = [
-            os.path.join(self._round_dir(k), "results")
-            for k in self.committed_rounds()
-            if k > 0
-        ]
-        return self.spark.read.parquet(*paths)
+        return self._read("results", self.committed_rounds())
 
     def seen(self) -> Optional[DataFrame]:
         return self._read_seen(self.last_committed())

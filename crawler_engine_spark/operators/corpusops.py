@@ -447,25 +447,7 @@ def chunk_dedup(
     clean_text = the surviving chunks in original order ('' if none).
     clean_text is single-space-joined (whitespace-normalized) — runs of
     whitespace in the input do not survive reassembly."""
-    # tokenize in a separate projection so the transform lambda references
-    # a bound column, not the split() expression (which would re-evaluate
-    # once per chunk position)
-    toked = docs.select(
-        F.col(id_col).alias("_id"), ws_tokens(F.col(text_col)).alias("_toks")
-    )
-    t = F.col("_toks")
-    n_chunks = F.ceil(F.size(t) / F.lit(chunk_tokens)).cast("int")
-    chunked = toked.select(
-        "_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(n_chunks - 1, F.lit(0))),
-                lambda k: F.concat_ws(
-                    " ", F.slice(t, k * chunk_tokens + 1, chunk_tokens)
-                ),
-            )
-        ).alias("pos", "chunk"),
-    ).where(F.col("chunk") != "")
+    chunked = _stride_chunks(docs, text_col, id_col, chunk_tokens)
     counts = chunked.groupBy("chunk").agg(F.count("*").alias("_c"))
     kept = (
         chunked.join(counts, "chunk")

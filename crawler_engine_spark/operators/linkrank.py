@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from . import urlops
 from .. import caches
+from ..frontier.politeness import apply_host_reputation
 
 
 def pagerank(
@@ -522,29 +523,23 @@ def apply_link_rank(
     max_factor: float = 2.0,
 ) -> DataFrame:
     """Scale each host's politeness ``host_budget`` by its link-graph
-    authority — the crawl-scheduling twin of
-    ``politeness.apply_host_reputation`` (corpus quality) with PageRank as
-    the signal: well-linked hosts earn budget, obscure hosts keep the ≥1
+    authority: ``politeness.apply_host_reputation`` with PageRank as the
+    signal — well-linked hosts earn budget, obscure hosts keep the ≥1
     liveness floor.
 
     ``ranks`` columns: host, rank_micro (the :func:`pagerank` output keyed
-    by host).  The factor interpolates linearly from ``min_factor`` (rank
-    0) to ``max_factor`` (the table's max rank); hosts absent from the
-    table rank 0.  The rank table is host-cardinality — a broadcast join,
-    shuffle-free on top of the existing budget column."""
-    mx = ranks.agg(F.max("rank_micro")).first()[0] or 1
-    rep = ranks.select("host", F.col("rank_micro").alias("_rm"))
-    norm = F.coalesce(F.col("_rm"), F.lit(0)).cast("double") / F.lit(float(mx))
-    factor = F.lit(min_factor) + (F.lit(max_factor) - F.lit(min_factor)) * norm
-    return (
-        frontier.join(F.broadcast(rep), on="host", how="left")
-        .withColumn(
-            "host_budget",
-            # round before flooring: IEEE products can land just below the
-            # mathematical value (the apply_host_reputation guard)
-            F.greatest(
-                F.lit(1), F.floor(F.round(F.col("host_budget") * factor, 6))
-            ).cast("int"),
-        )
-        .drop("_rm")
+    by host).  A host's quality is its rank over the table's max rank
+    (over 1 when that max is 0 or absent), so the factor runs from
+    ``min_factor`` (rank 0) to ``max_factor`` (the max rank); hosts absent
+    from the table rank 0.  The max is a single-row aggregate inside the
+    plan, not a driver action, and the host-cardinality rank table
+    broadcasts into the frontier."""
+    mx = ranks.agg(F.max("rank_micro").alias("_mx"))
+    quality = ranks.crossJoin(mx).select(
+        "host",
+        (F.col("rank_micro") / F.coalesce(F.nullif("_mx", F.lit(0)), F.lit(1)))
+        .alias("avg_quality"),
+    )
+    return apply_host_reputation(
+        frontier, quality, min_factor, max_factor, default_quality=0.0
     )

@@ -1,5 +1,5 @@
 """URL operators — Spark-native column expressions (the scale path) plus
-Arrow-vectorized UDF equivalents (the byte-parity path).
+one Arrow-vectorized UDF, href resolution, which has no column form.
 
 The column expressions compile to JVM-side whole-stage codegen (no Python in
 the hot path); a property test asserts they agree with the pure-Python
@@ -8,8 +8,6 @@ utils/web_utils.py:16-45 & 260-278).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column
@@ -76,20 +74,8 @@ def is_valid_url_col(url: Column) -> Column:
 
 
 # --------------------------------------------------------------------------
-# Arrow-vectorized UDFs (parity path; used by tests and odd URL shapes)
+# Arrow-vectorized UDF (odd href shapes the column fast path skips)
 # --------------------------------------------------------------------------
-
-
-@pandas_udf(T.StringType())
-def canonicalize_url_udf(urls: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for batch in urls:
-        yield batch.map(lambda u: urlkit.canonicalize_url(u) if u is not None else None)
-
-
-@pandas_udf(T.StringType())
-def url_host_udf(urls: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    for batch in urls:
-        yield batch.map(lambda u: urlkit.url_host(u) if u is not None else None)
 
 
 @pandas_udf(T.StringType())

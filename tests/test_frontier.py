@@ -184,20 +184,34 @@ def test_commit_counts_match_written_files(spark, world):
     assert any(rec["links_found"] for rec in records)
 
 
-@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
-def test_run_round_spends_no_count_or_collect(spark, world, monkeypatch, seen_filter):
+_GUARD_CONFIGS = {
+    "bloom": CrawlConfig(seen_filter="bloom"),
+    "cuckoo": CrawlConfig(seen_filter="cuckoo"),
+    # round 2 ranks the host graph round 1 wrote; round 3 reuses the table
+    "link_rank_reuse": CrawlConfig(link_rank_budget=True, link_rank_every=2),
+}
+
+
+@pytest.mark.parametrize("case", list(_GUARD_CONFIGS))
+def test_run_round_spends_no_count_or_collect(spark, world, monkeypatch, case):
     """A round's bookkeeping rides on work it already does: under the
-    default CrawlConfig with either seen-set backend, run_round never calls
-    DataFrame.count, and calls DataFrame.collect only as the seen set's
-    build action (PartitionedSeenSet._build)."""
-    state = os.path.join(world["root"], f"state_no_rescans_{seen_filter}")
+    default CrawlConfig with either seen-set backend, and in a round that
+    reuses the link-rank table, run_round never calls DataFrame.count, and
+    calls DataFrame.collect only as the seen set's build action
+    (PartitionedSeenSet._build).  No read of the engine's own files infers
+    its schema: the page store's read in round 1 is the only parquet read
+    on a reader with no schema set."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    state = os.path.join(world["root"], f"state_no_rescans_{case}")
     shutil.rmtree(state, ignore_errors=True)
     eng = CrawlEngine(spark, state, world["pages_path"], world["robots_df"],
-                      CrawlConfig(seen_filter=seen_filter))
+                      _GUARD_CONFIGS[case])
     eng.init_from_seeds(_seeds_df(spark, world["seeds"]))
     frame = type(spark.range(0))
-    real_collect = frame.collect
-    calls = []
+    real_count, real_collect = frame.count, frame.collect
+    real_schema, real_parquet = DataFrameReader.schema, DataFrameReader.parquet
+    calls, untyped = [], []
 
     def caller():
         f = sys._getframe(2)
@@ -205,18 +219,45 @@ def test_run_round_spends_no_count_or_collect(spark, world, monkeypatch, seen_fi
 
     def count(self):
         calls.append(("count",) + caller())
-        return 0
+        return real_count(self)
 
     def collect(self):
         calls.append(("collect",) + caller())
         return real_collect(self)
 
+    def schema(self, s):
+        self._typed = True
+        return real_schema(self, s)
+
+    def parquet(self, *paths, **options):
+        if not getattr(self, "_typed", False):
+            untyped.append(paths)
+        return real_parquet(self, *paths, **options)
+
     monkeypatch.setattr(frame, "count", count)
     monkeypatch.setattr(frame, "collect", collect)
-    records = [eng.run_round(1), eng.run_round(2)]
+    monkeypatch.setattr(DataFrameReader, "schema", schema)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    rounds = (1, 2, 3) if case == "link_rank_reuse" else (1, 2)
+    records, round_calls, round_reads = {}, {}, {}
+    for k in rounds:
+        records[k] = eng.run_round(k)
+        round_calls[k], round_reads[k] = set(calls), list(untyped)
+        calls.clear()
+        untyped.clear()
     monkeypatch.undo()
-    assert all(records)
-    assert set(calls) == {("collect", "bloom.py", "_build")}, calls
+    assert all(records.values())
+    if case == "link_rank_reuse":
+        # round 2's PageRank recompute is allowed its own actions
+        assert records[2]["link_rank_recomputed"]
+        assert records[3]["link_rank_applied"]
+        assert not records[3]["link_rank_recomputed"]
+        del round_calls[2]
+    for k, called in round_calls.items():
+        assert called == {("collect", "bloom.py", "_build")}, (k, called)
+    assert round_reads == {
+        k: [(world["pages_path"],)] if k == 1 else [] for k in rounds
+    }, round_reads
 
 
 @pytest.mark.parametrize(
