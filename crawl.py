@@ -227,6 +227,7 @@ def cmd_ingest(args) -> None:
     (record-scale parallelism via --tasks; the at-scale path)."""
     from pyspark.sql import functions as F
 
+    from crawler_engine_spark.frontier.rounds import write_counted
     from crawler_engine_spark.sources.warc import (
         read_cdxj,
         read_warc_pages,
@@ -270,10 +271,7 @@ def cmd_ingest(args) -> None:
         pages = read_warc_pages(spark, args.warc)
     if not args.keep_non_200:
         pages = pages.where(F.col("http_status") == 200)
-    pages.select("url", "html", "warc_ts").write.mode("overwrite").parquet(
-        args.out
-    )
-    n_pages = spark.read.parquet(args.out).count()
+    n_pages = write_counted(pages.select("url", "html", "warc_ts"), args.out)["n"]
     print(json.dumps({"command": "ingest", "pages": n_pages, "out": args.out}))
     spark.stop()
 
@@ -290,6 +288,7 @@ def cmd_rank(args) -> None:
         edge_rounds,
         host_edge_inputs,
         read_rounds,
+        write_counted,
     )
     from crawler_engine_spark.operators import linkrank
 
@@ -320,9 +319,8 @@ def cmd_rank(args) -> None:
             edges, src_col="src_host", dst_col="dst_host",
             iterations=args.iterations, teleport=teleport,
         )
-    ranks.write.mode("overwrite").parquet(args.out)
+    n_hosts = write_counted(ranks, args.out)["n"]
     linkrank.release_caches(ranks)
-    n_hosts = spark.read.parquet(args.out).count()
     print(json.dumps({"command": "rank", "hosts": n_hosts,
                       "edge_inputs": len(edge_dirs), "out": args.out}))
     spark.stop()

@@ -18,9 +18,9 @@ recomputable lineage (never checkpoint cuts), so releasing early only
 forfeits reuse — a consumer that runs afterwards recomputes the same
 deterministic result.  Unreleased entries are individually small
 (candidate-cardinality pairs, per-target aggregates), but a session
-that invokes cache-handing operators in a loop — e.g. ``bench_ab.py``'s
-7 timed reps — accumulates one per call, so the loop must drain the
-registry between iterations.
+that invokes cache-handing operators in a loop — e.g. a crawl's rounds
+or a benchmark's timed reps — accumulates one per call, so the loop
+must drain the registry between iterations.
 """
 
 from __future__ import annotations

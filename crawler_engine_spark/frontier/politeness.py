@@ -28,8 +28,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from .. import caches
+from pyspark.sql.internal import InternalFunction
 
 DEFAULT_CRAWL_DELAY_S = 0.5  # models/config.py:161
 DEFAULT_ROUND_SECONDS = 10.0
@@ -150,212 +149,27 @@ def select_batch(
     return selected, remainder
 
 
-#: Bucket-count cap for :func:`global_fetch_sequence`.  Each bucket's
-#: row_number window is one reducer task and each row pays one struct
-#: comparison per boundary, so the cap bounds per-row CPU while keeping
-#: per-reducer row counts at round-batch scale (a politeness-budgeted
-#: round batch split 128 ways).  Raise via the ``n_buckets`` argument on
-#: clusters whose round batches outgrow it.
-DEFAULT_MAX_SEQ_BUCKETS = 128
-
-#: Order-minimum sentinels used to fold a NULL sort-key field into the
-#: bucket key: Spark sorts nulls FIRST ascending, and the type minimum is
-#: the closest total-order stand-in.  A genuine minimum value and a null
-#: then share a bucket key — same bucket, window orders them null-first
-#: within it — which preserves global monotonicity (nothing orders
-#: between them).
-_ORDER_MIN = {
-    "tinyint": -(2**7), "smallint": -(2**15),
-    "int": -(2**31), "bigint": -(2**63),
-    "float": float("-inf"), "double": float("-inf"),
-}
-
-
-#: Floor for the content-hash sampling modulus of the in-plan boundary
-#: estimate: one in ``mod`` rows (by ``pmod(url_hash, mod)``) contributes
-#: its sort key to the boundary sample.  The sampled-key array lives in
-#: ONE aggregate row — batch/mod structs — which crosses only the
-#: aggregate's SinglePartition final-merge exchange (the broadcast that
-#: follows carries at most ``n_buckets − 1`` probed boundary structs, not
-#: the sample).  The final-merge task's heap and sort time are therefore
-#: what the modulus bounds; :func:`seq_sample_mod` adapts it to the
-#: engine's free batch-size estimate so the sample stays ~40 keys per
-#: bucket at any batch size.
-DEFAULT_SEQ_SAMPLE_MOD = 64
-
-
-def seq_sample_mod(
-    est_batch_rows: int | None, n_buckets: int = DEFAULT_MAX_SEQ_BUCKETS
-) -> int:
-    """Adaptive sampling modulus for :func:`global_fetch_sequence`.
-
-    Targets ~40 sampled keys per bucket from a batch-size estimate the
-    caller already has for free (the engine passes the previous round's
-    ``fetched`` count, falling back to the committed ``frontier_size``
-    when that is 0 — round batches are politeness-budget-bounded and
-    change gradually, and correctness never depends on the estimate:
-    a stale one only moves the sample size / bucket balance, both of
-    which degrade gracefully).  Clamped below by
-    ``DEFAULT_SEQ_SAMPLE_MOD`` so small batches keep a dense sample.
-
-    Callers normally pass ``est_batch_rows`` to
-    :func:`global_fetch_sequence` instead of calling this directly:
-    the ~40-keys/bucket target only holds when ``n_buckets`` here is
-    the bucket count actually used, and that is resolved (from
-    ``defaultParallelism``) inside ``global_fetch_sequence``.
-    """
-    if not est_batch_rows or est_batch_rows <= 0:
-        return DEFAULT_SEQ_SAMPLE_MOD
-    return max(DEFAULT_SEQ_SAMPLE_MOD, est_batch_rows // (n_buckets * 40))
-
-
 def global_fetch_sequence(
-    selected: DataFrame,
-    offset: int = 0,
-    n_buckets: int | None = None,
-    sample_mod: int | None = None,
-    est_batch_rows: int | None = None,
+    selected: DataFrame, offset: int = 0, est_batch_rows: int | None = None
 ) -> DataFrame:
-    """Assign a deterministic global ``fetch_seq`` by total priority order
-    WITHOUT a single-partition window: deterministic order-monotonic
-    bucketing, per-bucket row_number, plus per-bucket offsets.
+    """Number ``selected`` with ``fetch_seq`` = ``offset`` + its rank in the
+    total priority order (PRIORITY_COLS, url_hash, canonical_url).
 
-    Correctness here must not depend on two plan branches sharing one
-    physical layout.  An earlier design range-repartitioned and keyed
-    offsets by ``spark_partition_id()``, leaning on the cache as the
-    sharing point — but a DataFrame *derived* from the result after a
-    registry drain re-plans without the ``InMemoryRelation``
-    substitution, and the two range exchanges (the counts branch is
-    column-pruned, so ``ReusedExchange`` cannot match them) then sample
-    boundaries independently; at sampled-boundary scale the layouts can
-    differ and a stale map over a fresh layout silently corrupts the
-    sequence (r05 review).
-
-    So the bucket id is made a pure function of row values: boundary
-    keys come from a deterministic content-hash sample
-    (``pmod(url_hash, sample_mod) == 0`` — no RNG, no RDD-id-seeded
-    sampling) sorted into a single-row array, evenly probed for
-    ``n_buckets − 1`` boundary structs, and broadcast over the batch;
-    ``_pid`` = count of boundaries ≤ the row's sort key.  The boundary
-    subplan is pure data → value, so even when a branch re-evaluates it
-    from scratch — cached, drained, recomputed after executor loss — it
-    produces the identical array, and offsets and row numbers always
-    describe the same layout by construction.  Everything stays in-plan:
-    no driver action is spent here (an intermediate version collected
-    boundaries to the driver as literals — same determinism, but the two
-    extra driver actions per round cost ~14% crawl throughput in an
-    interleaved A/B).  The cache below is a pure performance
-    optimization (``selected`` is two stacked windows) and is registered
-    in the session registry, which the engine drains at each round
-    commit; draining is genuinely correctness-free, as the registry
-    contract states (value-locked in tests/test_plans.py, including the
-    derived-plan-after-drain case).
-
-    The cumulative-offset map also stays in-query: a count-per-bucket
-    aggregate folded into a single-row ``map<pid, offset>``
-    (``F.aggregate`` over the sorted counts) broadcast back over a 1×N
-    cross join.  The two single-partition exchanges this operator
-    introduces carry one metadata-sized row each (the boundary-sample
-    array and the offset map); the row_number window stays partitioned
-    by ``_pid``.  When the sample is smaller than ``n_buckets`` (tiny
-    batches), probing yields fewer distinct boundaries and the bucket
-    count adapts downward automatically.
+    One range-partitioned sort, then ``distributed_sequence_id`` (the
+    ``zipWithIndex``-backed sequence behind pandas-on-Spark's default
+    index).  ``canonical_url`` makes the order total, so the rank does not
+    depend on the partitioning and every re-evaluation of the plan gives
+    the same numbers.  ``est_batch_rows`` is ignored: perfbench's traced
+    replay still passes it, and a benchmark change will remove both.
     """
-    order_cols = PRIORITY_COLS + ["url_hash"]
-    spark = selected.sparkSession
-    if n_buckets is None:
-        n_buckets = min(
-            max(spark.sparkContext.defaultParallelism, 1),
-            DEFAULT_MAX_SEQ_BUCKETS,
-        )
-    if sample_mod is None:
-        # adapt AFTER resolving the real bucket count — computing the
-        # modulus against the 128-bucket cap on a 16-way cluster would
-        # oversample every bucket 8x (r05 review)
-        sample_mod = seq_sample_mod(est_batch_rows, n_buckets)
-    arranged = selected.persist()
-    caches.register(arranged)
-
-    dtypes = dict(selected.dtypes)
-    key_fields = []
-    for c in order_cols:
-        col = F.col(c)
-        sentinel = _ORDER_MIN.get(dtypes[c])
-        if sentinel is not None:
-            col = F.coalesce(col, F.lit(sentinel).cast(dtypes[c]))
-        key_fields.append(col.alias(c))
-    key = F.struct(*key_fields)
-
-    if n_buckets > 1:
-        sample = arranged.agg(
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.pmod(F.col("url_hash"), F.lit(sample_mod)) == 0,
-                        key,
-                    )
-                )
-            ).alias("_keys")
-        )
-        nk = F.size(F.col("_keys"))
-
-        def _probe(i):
-            # even probe into the sorted sample; F.get is 0-based and
-            # yields NULL (not an ANSI error) out of bounds, so an empty
-            # sample degrades to an empty boundary array
-            idx = F.least(
-                ((i.cast("long") * nk) / F.lit(n_buckets)).cast("int"),
-                nk - F.lit(1),
-            )
-            return F.get(F.col("_keys"), idx)
-
-        bounds = sample.select(
-            F.array_distinct(
-                F.filter(
-                    F.transform(
-                        F.sequence(F.lit(1), F.lit(n_buckets - 1)), _probe
-                    ),
-                    lambda x: x.isNotNull(),
-                )
-            ).alias("_bnd")
-        )
-        keyed = (
-            arranged.crossJoin(F.broadcast(bounds))
-            .withColumn(
-                "_pid",
-                F.aggregate(
-                    F.col("_bnd"),
-                    F.lit(0),
-                    lambda acc, b: acc
-                    + F.when(key >= b, F.lit(1)).otherwise(F.lit(0)),
-                ).cast("int"),
-            )
-            .drop("_bnd")
-        )
-    else:
-        keyed = arranged.withColumn("_pid", F.lit(0))
-
-    counts = keyed.groupBy("_pid").agg(F.count("*").alias("_n"))
-    offset_map = counts.agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("_pid", "_n"))),
-            F.struct(
-                F.lit(offset).cast("long").alias("acc"),
-                F.create_map().cast("map<int,bigint>").alias("m"),
-            ),
-            lambda s, x: F.struct(
-                (s["acc"] + x["_n"]).alias("acc"),
-                F.map_concat(s["m"], F.create_map(x["_pid"], s["acc"])).alias("m"),
-            ),
-            lambda s: s["m"],
-        ).alias("_om")
+    # AttachDistributedSequenceExec otherwise persists its input on every
+    # execution, and only AQE's end-of-query cleanup unpersists it (with
+    # AQE off, each execution strands a copy); without the cache, its
+    # second pass re-reads the sort's shuffle output
+    selected.sparkSession.conf.set(
+        "pandas_on_Spark.compute.default_index_cache", "NONE"
     )
-    w = Window.partitionBy("_pid").orderBy(*[F.col(c).asc() for c in order_cols])
-    return (
-        keyed.crossJoin(F.broadcast(offset_map))
-        .withColumn(
-            "fetch_seq",
-            (F.row_number().over(w) - 1 + F.col("_om")[F.col("_pid")]).cast("long"),
-        )
-        .drop("_pid", "_om")
+    order = PRIORITY_COLS + ["url_hash", "canonical_url"]
+    return selected.orderBy(*order).withColumn(
+        "fetch_seq", F.lit(offset) + InternalFunction.distributed_sequence_id()
     )

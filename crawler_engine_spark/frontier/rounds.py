@@ -82,7 +82,7 @@ ROUND_SCHEMAS = {
 STATE_FORMAT_VERSION = 2
 
 
-def _write_counted(df: DataFrame, path: str, **counts: Column) -> dict:
+def write_counted(df: DataFrame, path: str, **counts: Column) -> dict:
     """Write ``df`` as parquet to ``path``; return its row count ``n`` and
     ``counts`` (name → aggregate), observed on the write itself."""
     obs = Observation()
@@ -290,7 +290,7 @@ class CrawlEngine:
         rd = self._round_dir(0)
         if os.path.isdir(rd):
             shutil.rmtree(rd)
-        seeded = _write_counted(frontier, os.path.join(rd, "frontier"))
+        seeded = write_counted(frontier, os.path.join(rd, "frontier"))
         os.makedirs(os.path.join(rd, "bloom"), exist_ok=True)
         with open(self._commit_path(0), "w") as f:
             json.dump(
@@ -649,17 +649,7 @@ class CrawlEngine:
         # 2. politeness batch selection (salted two-phase window, W5)
         selected, remainder = politeness.select_batch(eligible, self.cfg.num_salts)
         selected = politeness.global_fetch_sequence(
-            selected,
-            offset=int(prev["total_fetched"]),
-            # last round's batch size is already in the commit record —
-            # a cost-free estimate that keeps the boundary sample at
-            # ~40 keys/bucket however large the round batch grows.  Round
-            # 1 (and a resumed stall round) has fetched == 0, exactly when
-            # the batch can be largest (the full seed list), so fall back
-            # to the committed frontier size — an upper bound on the
-            # batch, which errs on the sparse/memory-safe side.
-            est_batch_rows=int(prev.get("fetched", 0))
-            or int(prev.get("frontier_size", 0)),
+            selected, offset=int(prev["total_fetched"])
         )
 
         # 3. fetch-simulate (J2): left join against the page store
@@ -684,7 +674,7 @@ class CrawlEngine:
         )
         # lineage totals (A8) observed on the results write itself: exact
         # integer sums, so the record is the same under any partitioning
-        extracted = _write_counted(
+        extracted = write_counted(
             results, os.path.join(rd, "results"),
             content_chars=F.coalesce(F.sum(F.length("content")), F.lit(0)),
             links_found=F.coalesce(F.sum(F.size("out_links")), F.lit(0)),
@@ -785,7 +775,7 @@ class CrawlEngine:
                     keep_per_pattern=self.cfg.trap_keep_per_pattern,
                     suspects=suspects,
                 )
-        written = _write_counted(
+        written = write_counted(
             next_frontier, os.path.join(rd, "frontier"),
             discovered=F.count_if(F.col("origin") == "discovered"),
         )
@@ -817,7 +807,7 @@ class CrawlEngine:
                 )
             )
         )
-        attempted = _write_counted(
+        attempted = write_counted(
             seen_delta, os.path.join(rd, "seen_delta"),
             blocked=F.count_if(F.col("fetch_status") == "robots_blocked"),
         )
@@ -866,13 +856,11 @@ class CrawlEngine:
         }
         # drain the session registry: the round's own persists (gated /
         # batch / flagged, registered at creation so a round that raises
-        # mid-flight leaves them drainable too),
-        # global_fetch_sequence's arranged projection, and any other
-        # intra-round hand-off must not outlive the round — a long crawl
-        # would otherwise strand one batch-sized cache per round.  Round
-        # commit is a safe drain point: everything the round produced is
-        # on disk, and registered caches are recomputable persists,
-        # never cuts.
+        # mid-flight leaves them drainable too) and any other intra-round
+        # hand-off must not outlive the round — a long crawl would
+        # otherwise strand one batch-sized cache per round.  Round commit
+        # is a safe drain point: everything the round produced is on disk,
+        # and registered caches are recomputable persists, never cuts.
         caches.release_all()
         # 11. atomic commit marker — written LAST
         with open(self._commit_path(k), "w") as f:

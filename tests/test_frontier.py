@@ -85,31 +85,44 @@ def oracle(world):
     )
 
 
+def _persisted_rdd_ids(spark):
+    return set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+
+
 @pytest.fixture(scope="module")
-def engine_run(spark, world):
+def engine_run_rdds(spark, world):
+    """``engine_run`` plus the ids of the RDDs the block manager holds
+    persisted just before and just after its ``run()``."""
     eng = _make_engine(spark, world, "state_main")
+    before = _persisted_rdd_ids(spark)
     records = eng.run(max_rounds=4)
-    return eng, records
+    return eng, records, before, _persisted_rdd_ids(spark)
 
 
-def test_round_commit_drains_cache_registry(engine_run):
+@pytest.fixture(scope="module")
+def engine_run(engine_run_rdds):
+    return engine_run_rdds[:2]
+
+
+def test_round_commit_drains_cache_registry(engine_run_rdds):
     """r05 review follow-up: rounds register their intra-round persists
     (gated / batch / flagged) in the session registry; the
     round-commit cleanup must drain it, or a long crawl strands several
-    batch-sized caches per round."""
+    batch-sized caches per round.  Persists made outside the registry
+    (an operator's own RDD cache) must not outlive the run either, so
+    the block manager holds no RDD the run added."""
     from crawler_engine_spark import caches
 
-    eng, records = engine_run
+    eng, records, before, after = engine_run_rdds
     assert len(records) >= 2  # multiple committed rounds ran
     assert not caches.REGISTRY
+    assert after <= before, sorted(after - before)
 
 
 def test_seed_commit_records_frontier_size(engine_run):
-    """r05 review follow-up: round 1's fetch-sequence boundary sample
-    adapts to the previous round's batch size, and the round-0 record
-    has fetched == 0 — exactly when the batch can be largest (the full
-    seed list).  The seed commit must therefore carry frontier_size so
-    the fallback estimate is the seed count, not the dense default."""
+    """The seed commit carries frontier_size: round 1 reads it to stop
+    at once when the seed list gave no valid URL (the stall stop in
+    ``run_round``), and the round-0 record has fetched == 0."""
     eng, records = engine_run
     rec0 = eng._read_commit(0)
     assert rec0["fetched"] == 0
@@ -1212,6 +1225,7 @@ def test_cli_rank_reads_edge_compaction_plus_tail(spark, tmp_path):
     assert rec["edge_inputs"] == 2  # edges_compact.old/data + round 3's delta
     got = {r["node"]: r["rank_micro"] for r in spark.read.parquet(out).collect()}
     assert got == want
+    assert rec["hosts"] == len(got)
 
 
 def test_cli_rank_without_rounds_exits_with_message(tmp_path):

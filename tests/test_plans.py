@@ -2,6 +2,7 @@
 verified in explain() output — pushdown, pruning, broadcast, codegen."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -124,95 +125,39 @@ def test_politeness_selection_has_no_single_partition_exchange(spark, frontier_d
 
 
 def test_fetch_sequence_has_no_single_partition_window(spark, frontier_df):
-    """fetch_seq must be a distributed ranked sequence (deterministic
-    sampled-boundary buckets + offsets), not `Window [...] over ()` on
-    one partition.  SinglePartition exchanges are allowed ONLY as the
-    final-merge step of a global aggregate (the boundary-sample array
-    and the offset-map fold — one metadata row each, already reduced
-    map-side); batch data must never cross one.  Structurally: every
-    `Exchange SinglePartition` node's child must be a partial Aggregate,
-    and every Window node must carry a partition spec."""
+    """fetch_seq must be a distributed ranked sequence, not `Window [...]
+    over ()` on one partition: one range-partitioned sort on the full
+    order key feeding `AttachDistributedSequence`, and no
+    `Exchange SinglePartition` anywhere.  The last node is internal API
+    (``InternalFunction.distributed_sequence_id``), so this also pins it."""
     from crawler_engine_spark.frontier import politeness
 
-    with_budget = frontier_df.withColumn("host_budget", F.lit(3))
+    # non-constant priority fields, so the optimizer keeps them in the sort
+    with_budget = frontier_df.withColumns({
+        "host_budget": F.lit(3),
+        "depth": F.pmod(F.col("url_hash"), F.lit(3)).cast("int"),
+        "parent_seq": F.pmod(F.col("url_hash"), F.lit(5)),
+        "link_position": F.pmod(F.col("url_hash"), F.lit(7)).cast("int"),
+    })
     selected, _ = politeness.select_batch(with_budget, num_salts=4)
-    seq = politeness.global_fetch_sequence(selected)
-    plan = _plan(seq)
-    lines = plan.splitlines()
-    for i, ln in enumerate(lines):
-        # a ReusedExchange line repeats the referenced exchange's
-        # description without a child of its own — the original node is
-        # checked where it appears
-        if "Exchange SinglePartition" in ln and "ReusedExchange" not in ln:
-            nxt = lines[i + 1] if i + 1 < len(lines) else ""
-            assert "Aggregate" in nxt and "partial_" in nxt, (ln, nxt)
-    # the row_number window is partitioned by _pid (select_batch's own
-    # host/salt windows also appear upstream — those are partitioned too,
-    # by construction), and its exchange hashes on _pid
-    assert "windowspecdefinition(_pid" in plan, plan
-    assert "hashpartitioning(_pid" in plan, plan
-
-
-def test_seq_sample_mod_keeps_boundary_sample_bounded():
-    """r05 review: a fixed modulus grows the single-row boundary sample
-    linearly with batch size; the adaptive helper must keep it at ~40
-    keys per bucket at any batch size while clamping small batches to
-    the dense default."""
-    from crawler_engine_spark.frontier.politeness import (
-        DEFAULT_SEQ_SAMPLE_MOD,
-        seq_sample_mod,
+    plan = _plan(politeness.global_fetch_sequence(selected))
+    assert "Exchange SinglePartition" not in plan, plan
+    assert "AttachDistributedSequence" in plan, plan
+    key = ", ".join(
+        rf"{c}#\d+L? ASC NULLS FIRST"
+        for c in politeness.PRIORITY_COLS + ["url_hash", "canonical_url"]
     )
-
-    assert seq_sample_mod(None) == DEFAULT_SEQ_SAMPLE_MOD
-    assert seq_sample_mod(0) == DEFAULT_SEQ_SAMPLE_MOD
-    assert seq_sample_mod(10_000) == DEFAULT_SEQ_SAMPLE_MOD
-    # SCALE.md's stated 2x10^8-row round-batch bound: sample stays
-    # ~40 keys/bucket (one extra key per bucket from floor division)
-    mod = seq_sample_mod(200_000_000, 128)
-    assert 200_000_000 // mod <= 128 * 41
-
-
-def test_seq_sample_mod_uses_resolved_bucket_count(spark, frontier_df):
-    """r05 review follow-up: the ~40-keys/bucket target must be computed
-    against the bucket count global_fetch_sequence actually resolves
-    (min(defaultParallelism, cap)), not the 128 cap — on a 16-way
-    cluster the cap-based modulus oversamples every bucket 8x.  The
-    modulus is a plan literal, so the plan string is the ground truth
-    for what est_batch_rows produced."""
-    import re
-
-    from crawler_engine_spark.frontier import politeness
-    from crawler_engine_spark.frontier.politeness import (
-        DEFAULT_MAX_SEQ_BUCKETS,
-        seq_sample_mod,
-    )
-
-    resolved = min(
-        max(spark.sparkContext.defaultParallelism, 1), DEFAULT_MAX_SEQ_BUCKETS
-    )
-    est = 2_000_000_000
-    expected = seq_sample_mod(est, resolved)
-    with_budget = frontier_df.withColumn("host_budget", F.lit(3))
-    selected, _ = politeness.select_batch(with_budget, num_salts=4)
-    seq = politeness.global_fetch_sequence(selected, est_batch_rows=est)
-    mods = {
-        int(m)
-        for m in re.findall(r"pmod\(url_hash#\d+L?, (\d+)\) = 0", _plan(seq))
-    }
-    assert mods == {expected}, (mods, expected, resolved)
+    assert plan.count("rangepartitioning(") == 1, plan
+    assert re.search(rf"rangepartitioning\({key}, \d+\)", plan), plan
 
 
 def test_fetch_sequence_deterministic_under_drain(spark, frontier_df):
-    """r05 review: offsets and row numbers must describe ONE layout under
-    EVERY evaluation — including a plan derived from the result AFTER a
-    registry drain, which re-plans without the cache substitution and
-    re-evaluates both the counts branch and the main branch from scratch.
-    The bucket id is a pure function of row values (driver-pinned literal
-    boundaries), so any such re-evaluation is self-consistent by
-    construction.  Value lock: fetch_seq is a dense offset-based
-    permutation aligned with the total priority order, identical per key
-    before the drain, after the drain, and through a freshly-derived
-    plan."""
+    """fetch_seq must come out the same under EVERY evaluation — including
+    a plan derived from the result after a registry drain, which re-plans
+    and re-evaluates from scratch.  Value lock: fetch_seq is a dense
+    offset-based permutation aligned with the total priority order,
+    identical per key before the drain, after the drain, and through a
+    freshly-derived plan."""
     from crawler_engine_spark import caches
     from crawler_engine_spark.frontier import politeness
 
@@ -234,21 +179,76 @@ def test_fetch_sequence_deterministic_under_drain(spark, frontier_df):
 
     rows = seq.collect()
     first = seq_by_key(rows, len(rows))
-    executed = seq._jdf.queryExecution().executedPlan().toString()
-    cache_scans = executed.count("TableCacheQueryStage") + executed.count(
-        "InMemoryTableScan"
-    )
-    assert cache_scans >= 2, executed
     # drain the registry mid-lifetime (the "release at any point is
     # correctness-safe" contract), then re-evaluate BOTH the original
-    # DataFrame (memoized QueryExecution re-fills the cache) and a
-    # freshly-derived plan (no cache substitution at all — the case the
-    # old design could corrupt)
-    assert caches.release_all() >= 1
+    # DataFrame and a freshly-derived plan
+    caches.release_all()
     derived = seq.where(F.col("fetch_seq") >= 0)
     assert seq_by_key(derived.collect(), len(rows)) == first
     assert seq_by_key(seq.collect(), len(rows)) == first
-    spark.catalog.clearCache()  # the re-evaluations re-fill the cache
+
+
+def test_fetch_sequence_matches_global_row_number(spark):
+    """Value lock: with NULLs in every priority field and ties on
+    (PRIORITY_COLS, url_hash), fetch_seq is offset + a single-partition
+    global row_number over (PRIORITY_COLS, url_hash, canonical_url) at
+    any shuffle width, with AQE on and off, and two filtered branches of
+    one result joined back together agree on every row.  No evaluation
+    leaves an RDD persisted in the block manager (without AQE's cleanup,
+    AttachDistributedSequenceExec would strand its input cache)."""
+    from pyspark.sql import Window
+
+    from crawler_engine_spark.frontier import politeness
+
+    def mod_or_null(i, m, k):  # i % k, but NULL on every m-th row
+        return None if i % m == 0 else i % k
+
+    df = spark.createDataFrame(
+        [(f"https://h{i % 5}.example/p{i}", i % 6, mod_or_null(i, 11, 3),
+          mod_or_null(i, 13, 4), mod_or_null(i, 17, 2)) for i in range(150)],
+        "canonical_url string, url_hash long, depth int, parent_seq long, "
+        "link_position int",
+    )
+    order = politeness.PRIORITY_COLS + ["url_hash", "canonical_url"]
+    want = {
+        r["canonical_url"]: r["want"]
+        for r in df.select(
+            "canonical_url",
+            (F.lit(7) + F.row_number().over(Window.orderBy(*order)) - 1)
+            .alias("want"),
+        ).collect()
+    }
+
+    def persisted():
+        return set(dict(spark.sparkContext._jsc.getPersistentRDDs()))
+
+    before = persisted()
+    conf = spark.conf
+    saved = (conf.get("spark.sql.shuffle.partitions"),
+             conf.get("spark.sql.adaptive.enabled"))
+    try:
+        for aqe in ("true", "false"):
+            for parts in (1, 3, 16):
+                conf.set("spark.sql.adaptive.enabled", aqe)
+                conf.set("spark.sql.shuffle.partitions", str(parts))
+                seq = politeness.global_fetch_sequence(df, offset=7)
+                got = {r["canonical_url"]: r["fetch_seq"] for r in seq.collect()}
+                assert got == want, (aqe, parts)
+                a = seq.where(F.col("depth").isNull() | (F.col("depth") != 1))
+                b = seq.where(F.coalesce(F.col("link_position"), F.lit(1)) == 1)
+                pairs = a.select("canonical_url", "fetch_seq").join(
+                    b.select("canonical_url", F.col("fetch_seq").alias("b_seq")),
+                    "canonical_url",
+                ).collect()
+                assert pairs, (aqe, parts)
+                assert all(
+                    r["fetch_seq"] == r["b_seq"] == want[r["canonical_url"]]
+                    for r in pairs
+                ), (aqe, parts)
+    finally:
+        conf.set("spark.sql.shuffle.partitions", saved[0])
+        conf.set("spark.sql.adaptive.enabled", saved[1])
+    assert persisted() <= before
 
 
 # ------------------------------------------------------- round-2 operators

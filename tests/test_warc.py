@@ -298,3 +298,32 @@ def test_warc_spark_surface_feeds_extraction(spark, tmp_path):
     ok = res.where("success").select("url", F.size("out_links").alias("n"))
     assert all(r["n"] == 1 for r in ok.collect())
     assert ok.count() == 4
+
+
+def test_cli_ingest_prints_rows_written(spark, tmp_path):
+    """``crawl.py ingest --warc`` prints the page count observed on its
+    own write: it equals the rows in the output, with the non-200 record
+    dropped by default and kept under --keep-non-200."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    recs = _recs(3) + [("https://w.example/gone", _TS, b"<html>404</html>", 404)]
+    (tmp_path / "a.warc.gz").write_bytes(build_warc(recs, gzip_members=True))
+    crawl = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "crawl.py"
+    )
+    for flags, want in (([], 3), (["--keep-non-200"], 4)):
+        out = str(tmp_path / f"pages{len(flags)}")
+        proc = subprocess.run(
+            [sys.executable, crawl, "ingest", "--warc", str(tmp_path),
+             "--out", out, *flags],
+            capture_output=True, text=True, timeout=300,
+            env={**os.environ, "SPARK_GRAFT_CPUS": "2"},
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        rec = json.loads(
+            [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
+        )
+        assert rec["pages"] == spark.read.parquet(out).count() == want, flags
