@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from crawler_engine_spark.frontier import politeness
 from crawler_engine_spark.operators import dedup, similarity, textstats, urlops
 from crawler_engine_spark.operators.extraction import extract_pages
 
@@ -138,20 +139,18 @@ def q_frontier_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_politeness_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W5: salted two-phase per-host top-k — must equal the oracle's plain
-    window top-k (proves the skew-safe rewrite is exact)."""
+    """W5: the engine's salted two-phase per-host top-k
+    (``politeness.select_batch``) — must equal the oracle's plain window
+    top-k (proves the skew-safe selection is exact)."""
     urls = q_url_canonicalize(spark, sf_dir)
-    f = urls.withColumn("url_hash", F.xxhash64("canonical_url"))
-    budget = 5
-    order = [F.col("okey").asc()]
-    w1 = Window.partitionBy("host", F.pmod("url_hash", F.lit(8))).orderBy(*order)
-    phase1 = f.withColumn("_r1", F.row_number().over(w1)).where(F.col("_r1") <= budget)
-    w2 = Window.partitionBy("host").orderBy(*order)
-    return (
-        phase1.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= budget)
-        .select("host", "canonical_url", "rank")
-    )
+    f = urls.withColumns({
+        "url_hash": F.xxhash64("canonical_url"), "parent_seq": F.col("okey"),
+        "depth": F.lit(0), "link_position": F.lit(0),
+        "host_budget": F.lit(5), "allowed": F.lit(True),
+    })
+    selected, _ = politeness.select_batch(f)
+    w = Window.partitionBy("host").orderBy("parent_seq")
+    return selected.select("host", "canonical_url", F.row_number().over(w).alias("rank"))
 
 
 def q_batch_summary(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -284,6 +284,7 @@ def _skewed_frontier(spark, n_rows: int, hot_share: float, budget: int):
         F.col("id").cast("long").alias("parent_seq"),
         F.lit(0).alias("link_position"),
         F.lit(budget).alias("host_budget"),
+        F.lit(True).alias("allowed"),
     )
 
 
@@ -307,12 +308,8 @@ def run_skew(spark) -> dict:
     df = _skewed_frontier(spark, n_rows, 0.3, budget).cache()
     df.count()
 
-    order = [F.col(c).asc() for c in politeness.PRIORITY_COLS] + [
-        F.col("url_hash").asc()
-    ]
-
     def plain():
-        w = Window.partitionBy("host").orderBy(*order)
+        w = Window.partitionBy("host").orderBy(*politeness.ORDER_KEY)
         _materialize(
             df.withColumn("_r", F.row_number().over(w))
             .where(F.col("_r") <= F.col("host_budget"))

@@ -9,19 +9,22 @@ delay; hosts without one get the constant ``DEFAULT_CRAWL_DELAY_S`` (the
 reference's delay_between_requests default), which is not a config knob.
 
 Skew handling (explicit, per north rule): host popularity is Zipf-skewed, so
-a single window over ``host`` would straggle on hot hosts.  Selection is
-two-phase salted:
+a single window over ``host`` would straggle on hot hosts.  ``rank_batch``
+labels every frontier row ``_sel`` (in the batch or not) with two windows:
 
-  phase 1  window over (host, salt = pmod(url_hash, S)): row_number ≤ budget
-           — each hot host's ranking work spreads over S reducers; survivors
-           are ≤ S × budget per host.
-  phase 2  window over host on the ≤ S×budget survivors: row_number ≤ budget
-           — exact top-k per host, tiny input.
+  phase 1  over (host, allowed, salt = pmod(url_hash, S)): an allowed row
+           ranked ≤ budget survives — a hot host spreads over S reducers,
+           and a robots-blocked row never takes an allowed row's slot.
+  phase 2  over the whole frame, keyed (host, NULL for survivors else
+           salt): a survivor ranked ≤ budget is selected.  Only a host's
+           ≤ S × budget survivors share a group (exact top-k); the other
+           rows ride along so the frame keeps every row, and stay spread
+           by salt, so no hot host lands on one reducer.
 
-The selected set is *identical* to a single-phase top-k (phase 1 never drops
-a row that phase 2 would keep: a row in the host's true top-budget is within
-its salt's top-budget a fortiori), so ordering parity with the oracle
-simulator is preserved while the shuffle skew is bounded.
+The selected set is *identical* to a single-phase top-k over the allowed
+rows (a row in the host's true top-budget is within its salt's top-budget
+a fortiori).  Both windows order by the total ``ORDER_KEY``, so every
+recomputation of the frame labels each row the same way.
 """
 
 from __future__ import annotations
@@ -35,6 +38,8 @@ DEFAULT_ROUND_SECONDS = 10.0
 DEFAULT_NUM_SALTS = 8
 
 PRIORITY_COLS = ["depth", "parent_seq", "link_position"]
+# total order of a round: canonical_url breaks every (priority, url_hash) tie
+ORDER_KEY = PRIORITY_COLS + ["url_hash", "canonical_url"]
 
 
 def apply_robots(
@@ -120,46 +125,42 @@ def apply_host_reputation(
     )
 
 
+def rank_batch(frontier: DataFrame, num_salts: int = DEFAULT_NUM_SALTS) -> DataFrame:
+    """Every frontier row plus ``_sel``: whether it is in the round's batch
+    (allowed, and within its host's top ``host_budget`` in ``ORDER_KEY``).
+
+    Input must carry: host, allowed, host_budget, and ``ORDER_KEY``.
+    """
+    salt = F.pmod(F.col("url_hash"), F.lit(num_salts))
+    w1 = Window.partitionBy("host", "allowed", salt).orderBy(*ORDER_KEY)
+    top1 = F.row_number().over(w1) <= F.col("host_budget")
+    ranked = frontier.withColumn("_survivor", F.col("allowed") & top1)
+    survivor = F.col("_survivor")
+    w2 = Window.partitionBy("host", F.when(~survivor, salt)).orderBy(*ORDER_KEY)
+    top2 = F.row_number().over(w2) <= F.col("host_budget")
+    return ranked.withColumn("_sel", survivor & top2).drop("_survivor")
+
+
 def select_batch(
     frontier: DataFrame, num_salts: int = DEFAULT_NUM_SALTS
 ) -> tuple[DataFrame, DataFrame]:
-    """Priority-ordered per-host batch selection (salted two-phase window).
-
-    Input must carry: host, host_budget, url_hash, and PRIORITY_COLS.
-    Returns ``(selected, remainder)`` — remainder stays in the frontier.
-    """
-    order = [F.col(c).asc() for c in PRIORITY_COLS] + [F.col("url_hash").asc()]
-
-    salted = frontier.withColumn(
-        "_salt", F.pmod(F.col("url_hash"), F.lit(num_salts)).cast("int")
-    )
-    w1 = Window.partitionBy("host", "_salt").orderBy(*order)
-    phase1 = (
-        salted.withColumn("_r1", F.row_number().over(w1))
-        .where(F.col("_r1") <= F.col("host_budget"))
-        .drop("_r1")
-    )
-    w2 = Window.partitionBy("host").orderBy(*order)
-    ranked = phase1.withColumn("_r2", F.row_number().over(w2))
-    selected = ranked.where(F.col("_r2") <= F.col("host_budget")).drop("_r2", "_salt")
-
-    remainder = frontier.join(
-        selected.select("canonical_url"), on="canonical_url", how="left_anti"
-    )
-    return selected, remainder
+    """``(selected, remainder)``: the ``_sel`` and ``NOT _sel`` rows of
+    :func:`rank_batch` (same input contract)."""
+    ranked, sel = rank_batch(frontier, num_salts), F.col("_sel")
+    return ranked.where(sel).drop("_sel"), ranked.where(~sel).drop("_sel")
 
 
 def global_fetch_sequence(
     selected: DataFrame, offset: int = 0, est_batch_rows: int | None = None
 ) -> DataFrame:
-    """Number ``selected`` with ``fetch_seq`` = ``offset`` + its rank in the
-    total priority order (PRIORITY_COLS, url_hash, canonical_url).
+    """Number ``selected`` with ``fetch_seq`` = ``offset`` + its rank in
+    ``ORDER_KEY``.
 
     One range-partitioned sort, then ``distributed_sequence_id`` (the
     ``zipWithIndex``-backed sequence behind pandas-on-Spark's default
-    index).  ``canonical_url`` makes the order total, so the rank does not
-    depend on the partitioning and every re-evaluation of the plan gives
-    the same numbers.  ``est_batch_rows`` is ignored: perfbench's traced
+    index).  The order is total, so the rank does not depend on the
+    partitioning and every re-evaluation of the plan gives the same
+    numbers.  ``est_batch_rows`` is ignored: perfbench's traced
     replay still passes it, and a benchmark change will remove both.
     """
     # AttachDistributedSequenceExec otherwise persists its input on every
@@ -169,7 +170,6 @@ def global_fetch_sequence(
     selected.sparkSession.conf.set(
         "pandas_on_Spark.compute.default_index_cache", "NONE"
     )
-    order = PRIORITY_COLS + ["url_hash", "canonical_url"]
-    return selected.orderBy(*order).withColumn(
+    return selected.orderBy(*ORDER_KEY).withColumn(
         "fetch_seq", F.lit(offset) + InternalFunction.distributed_sequence_id()
     )

@@ -576,25 +576,14 @@ class CrawlEngine:
 
         # 1. robots gate (broadcast join, J3) + token-bucket state (W5)
         prev_tokens = self._read("host_tokens", [k - 1])
-        # Persisted: its consumers (the blocked rows, the politeness
-        # selection and its remainder) would otherwise each recompute the
-        # scan + join.  At the 10^10 design point this spills
-        # MEMORY_AND_DISK per executor rather than re-reading the frontier
-        # from storage once per consumer.
         gated = politeness.apply_robots(
             frontier, self.robots, self.cfg.round_seconds,
             host_tokens=prev_tokens, burst_rounds=self.cfg.burst_rounds,
-        ).persist()
-        # round-scoped persists register at creation so a round that
-        # raises mid-flight leaves them drainable (the next round's
-        # commit drain, or release_caches()) instead of stranded
-        caches.register(gated)
-        blocked = gated.where(~F.col("allowed")).select(*frontier.columns)
-        eligible = gated.where(F.col("allowed"))
+        )
 
         # 1b. link-rank budget feedback: PageRank over the host→host edges
         # committed rounds accumulated (written in step 5b) rescales each
-        # eligible host's budget by link authority before batch selection.
+        # host's budget by link authority before batch selection.
         # The edge files are distinct host pairs — host²-bounded metadata,
         # and the eager rank table is host-cardinality (broadcast join).
         # Politeness stays amortized: a >1× factor overdraws the host's
@@ -610,12 +599,12 @@ class CrawlEngine:
             # rerank cadence is derived purely from the on-disk layout (the
             # latest committed round that wrote a rank table) — resume-safe,
             # and an uncommitted crash rewinds it with the round itself.
-            # ``ranked`` is the round whose table this round applies: that
-            # one, or this round once it reranks, or none.
-            ranked = [j for j in committed
-                      if round_dirs(self.state_dir, "host_ranks", [j])][-1:]
-            if not ranked or k - ranked[0] >= self.cfg.link_rank_every:
-                ranked = []
+            # ``rank_round`` holds the round whose table this round
+            # applies: that one, or this round once it reranks, or none.
+            rank_round = [j for j in committed
+                          if round_dirs(self.state_dir, "host_ranks", [j])][-1:]
+            if not rank_round or k - rank_round[0] >= self.cfg.link_rank_every:
+                rank_round = []
                 edges = self._read(
                     "host_edges", *edge_rounds(self.state_dir, committed)
                 )
@@ -639,17 +628,28 @@ class CrawlEngine:
                     ).write.mode("overwrite").parquet(
                         os.path.join(rd, "host_ranks")
                     )
-                    ranked = [k]
+                    rank_round = [k]
                     link_rank_recomputed = True
-            ranks = self._read("host_ranks", ranked)
+            ranks = self._read("host_ranks", rank_round)
             if ranks is not None:
-                eligible = linkrank.apply_link_rank(eligible, ranks)
+                gated = linkrank.apply_link_rank(gated, ranks)
                 link_rank_applied = True
 
-        # 2. politeness batch selection (salted two-phase window, W5)
-        selected, remainder = politeness.select_batch(eligible, self.cfg.num_salts)
+        # 2. politeness batch selection (salted two-phase window, W5): the
+        # ranked frame keeps every frontier row; the robots-blocked rows,
+        # the batch and the carried remainder are three filters of it.
+        # Persisted, or each filter would recompute the scan, the joins and
+        # both windows.  At the 10^10 design point this spills
+        # MEMORY_AND_DISK per executor rather than re-reading the frontier.
+        ranked = politeness.rank_batch(gated, self.cfg.num_salts).persist()
+        # round-scoped persists register at creation so a round that
+        # raises mid-flight leaves them drainable (the next round's
+        # commit drain, or release_caches()) instead of stranded
+        caches.register(ranked)
+        blocked = ranked.where(~F.col("allowed"))
+        remainder = ranked.where(F.col("allowed") & ~F.col("_sel"))
         selected = politeness.global_fetch_sequence(
-            selected, offset=int(prev["total_fetched"])
+            ranked.where(F.col("_sel")), offset=int(prev["total_fetched"])
         )
 
         # 3. fetch-simulate (J2): left join against the page store
@@ -731,9 +731,9 @@ class CrawlEngine:
             maybe = maybe.join(
                 seen.select("canonical_url"), on="canonical_url", how="left_anti"
             )
-        # exclude the round's own frontier: the robots and link-rank joins
-        # keep every frontier row, so selected ∪ remainder ∪ blocked is
-        # exactly its URL set (fetched, still waiting, or robots-blocked)
+        # exclude the round's own frontier: the ranked frame keeps every
+        # frontier row, so selected ∪ remainder ∪ blocked is exactly its URL
+        # set (fetched, still waiting, or robots-blocked)
         survivors = definitely_new.unionByName(maybe).join(
             frontier.select("canonical_url"), on="canonical_url", how="left_anti"
         )
@@ -854,7 +854,7 @@ class CrawlEngine:
             "link_rank_applied": link_rank_applied,
             "link_rank_recomputed": link_rank_recomputed,
         }
-        # drain the session registry: the round's own persists (gated /
+        # drain the session registry: the round's own persists (ranked /
         # batch / flagged, registered at creation so a round that raises
         # mid-flight leaves them drainable too) and any other intra-round
         # hand-off must not outlive the round — a long crawl would

@@ -564,6 +564,59 @@ def test_salted_politeness_bounds_skewed_reducer(spark):
     df.unpersist()
 
 
+def test_ranked_frame_splits_batch_remainder_blocked(spark):
+    """rank_batch labels every row: its ``_sel`` rows are exactly a plain
+    per-host top-k over the allowed rows, even when robots-blocked rows
+    hold a host's best priorities and one host owns most of the frame;
+    the batch, the carried remainder and the blocked rows are disjoint
+    filters whose union is the input, at any shuffle width."""
+    from crawler_engine_spark.frontier import politeness
+
+    # priority (0, i // 4, 0) and url_hash i % 2: rows i and i + 2 tie on
+    # both, so only canonical_url orders them; i < 3 and every 9th row
+    # are robots-blocked, which puts blocked rows first in every host
+    hosts = (("hot", 400, 7), ("a", 30, 3), ("b", 12, 5), ("c", 2, 4))
+    rows = [
+        (f"https://{h}.example/p{i}", h, i % 2, 0, i // 4, 0, budget,
+         not (i < 3 or i % 9 == 0))
+        for h, n, budget in hosts
+        for i in range(n)
+    ]
+    frame = spark.createDataFrame(
+        rows,
+        "canonical_url string, host string, url_hash long, depth int, "
+        "parent_seq long, link_position int, host_budget int, allowed boolean",
+    )
+    want = set()
+    for h, _, budget in hosts:
+        allowed = sorted(
+            (r for r in rows if r[1] == h and r[7]),
+            key=lambda r: (r[3], r[4], r[5], r[2], r[0]),
+        )
+        want |= {r[0] for r in allowed[:budget]}
+    blocked_urls = {r[0] for r in rows if not r[7]}
+
+    conf = spark.conf
+    saved = conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in (1, 3, 16):
+            conf.set("spark.sql.shuffle.partitions", str(parts))
+            ranked = politeness.rank_batch(frame, num_salts=4)
+
+            def urls(cond):
+                return [r[0] for r in ranked.where(cond).select("canonical_url").collect()]
+
+            batch = urls(F.col("_sel"))
+            remainder = urls(F.col("allowed") & ~F.col("_sel"))
+            blocked = urls(~F.col("allowed"))
+            assert set(batch) == want, parts
+            assert set(blocked) == blocked_urls, parts
+            # pairwise disjoint, and together exactly the input
+            assert sorted(batch + remainder + blocked) == sorted(r[0] for r in rows)
+    finally:
+        conf.set("spark.sql.shuffle.partitions", saved)
+
+
 def test_resume_rejects_foreign_state_format(spark, world):
     """A state_dir written by an older checkpoint layout (no/other
     format_version in the round-0 commit) fails fast on resume instead of
@@ -665,6 +718,7 @@ def test_host_reputation_scales_budgets(spark):
         .withColumn("parent_seq", F.lit(-1).cast("long"))
         .withColumn("link_position", F.lit(0))
         .withColumn("host_budget", F.lit(4))
+        .withColumn("allowed", F.lit(True))
     )
     rep = spark.createDataFrame(
         [("good.example", 1.0), ("bad.example", 0.0)], "host string, avg_quality double"

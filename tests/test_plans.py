@@ -117,11 +117,31 @@ def test_politeness_selection_has_no_single_partition_exchange(spark, frontier_d
     `Exchange SinglePartition` in this plan would serialize the frontier."""
     from crawler_engine_spark.frontier import politeness
 
-    with_budget = frontier_df.withColumn("host_budget", F.lit(3))
+    with_budget = frontier_df.withColumns(
+        {"host_budget": F.lit(3), "allowed": F.lit(True)}
+    )
     selected, remainder = politeness.select_batch(with_budget, num_salts=4)
     for df in (selected, remainder):
         plan = _plan(df)
         assert "Exchange SinglePartition" not in plan, plan
+
+
+def test_batch_selection_shuffles_no_host_only_exchange(spark, frontier_df):
+    """Phase 2 of the selection sees the whole ranked frontier, so no
+    Exchange may be keyed by ``host`` alone: a hot host would land on one
+    reducer.  And the remainder is a filter of the ranked frame, not an
+    anti-join of the frontier against the batch."""
+    from crawler_engine_spark.frontier import politeness
+
+    frame = frontier_df.withColumns({
+        "host_budget": F.lit(3),
+        "allowed": F.pmod(F.col("url_hash"), F.lit(5)) != 0,
+    })
+    plan = _plan(politeness.rank_batch(frame, num_salts=4))
+    assert plan.count("Exchange hashpartitioning(") == 2, plan
+    assert not re.search(r"Exchange hashpartitioning\(host#\d+, \d+\)", plan), plan
+    for df in politeness.select_batch(frame, num_salts=4):
+        assert "LeftAnti" not in _plan(df)
 
 
 def test_fetch_sequence_has_no_single_partition_window(spark, frontier_df):
@@ -135,6 +155,7 @@ def test_fetch_sequence_has_no_single_partition_window(spark, frontier_df):
     # non-constant priority fields, so the optimizer keeps them in the sort
     with_budget = frontier_df.withColumns({
         "host_budget": F.lit(3),
+        "allowed": F.lit(True),
         "depth": F.pmod(F.col("url_hash"), F.lit(3)).cast("int"),
         "parent_seq": F.pmod(F.col("url_hash"), F.lit(5)),
         "link_position": F.pmod(F.col("url_hash"), F.lit(7)).cast("int"),
@@ -161,7 +182,9 @@ def test_fetch_sequence_deterministic_under_drain(spark, frontier_df):
     from crawler_engine_spark import caches
     from crawler_engine_spark.frontier import politeness
 
-    with_budget = frontier_df.withColumn("host_budget", F.lit(3))
+    with_budget = frontier_df.withColumns(
+        {"host_budget": F.lit(3), "allowed": F.lit(True)}
+    )
     selected, _ = politeness.select_batch(with_budget, num_salts=4)
     seq = politeness.global_fetch_sequence(selected, offset=7)
 
