@@ -30,7 +30,7 @@ import os
 from dataclasses import dataclass, replace
 from typing import Any, Mapping, Optional
 
-from .frontier import politeness
+from .frontier import bloom, politeness
 from .kernels.extract import DEFAULT_OPTIONS, ExtractOptions
 
 # (file section, file key, env var) per knob.  ``crawl`` keys are
@@ -65,8 +65,11 @@ KNOBS = (
 class CrawlConfig:
     round_seconds: float = politeness.DEFAULT_ROUND_SECONDS
     num_salts: int = politeness.DEFAULT_NUM_SALTS
-    bloom_partitions: int = 32
-    bloom_bits_per_segment: int = 1 << 20
+    # Seen-set geometry (frontier/bloom.py).  Fixed at round 0: an engine
+    # resuming a state dir reads it from the round-0 commit record, so a
+    # changed value applies only to a fresh crawl.
+    bloom_partitions: int = bloom.DEFAULT_NUM_PARTITIONS
+    bloom_bits_per_segment: int = bloom.DEFAULT_BITS_PER_SEGMENT
     mode: Optional[str] = None  # None → adaptive (reference dispatch)
     extract_opts: ExtractOptions = DEFAULT_OPTIONS
     max_rounds: int = 100
@@ -78,11 +81,6 @@ class CrawlConfig:
     # resume source of truth); compaction only bounds the anti-join's read
     # fan-in on long crawls.
     compact_every: int = 0
-    # Prefilter backend: 'bloom' (smaller, append-only) or 'cuckoo'
-    # (deletable — enables recrawl/TTL via CuckooSeenSet.delete).  Both keep
-    # the no-false-negative contract; exactness always rests on the exact
-    # anti-join either way.
-    seen_filter: str = "bloom"
     # Crawl-trap guard (frontier/traps.py): flag any (host, URL-template)
     # whose next-frontier distinct-URL count reaches trap_threshold and keep
     # only the trap_keep_per_pattern lowest-hash URLs from it.  0 disables —

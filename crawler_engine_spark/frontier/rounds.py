@@ -203,30 +203,21 @@ class CrawlEngine:
         self.pages_path = pages_path
         self.robots = robots
         self.cfg = config
-        if config.seen_filter == "cuckoo":
-            from .cuckoo import CuckooSeenSet
+        # a committed state dir fixes the seen-set geometry at round 0; a
+        # record written before it was stamped keeps the config's
+        rec = self._check_state_format()
+        self.bloom = BloomSeenSet(
+            rec.get("bloom_partitions", config.bloom_partitions),
+            rec.get("bloom_bits_per_segment", config.bloom_bits_per_segment),
+        )
 
-            # round the bloom-sizing knob down to the cuckoo backend's
-            # power-of-two bucket requirement (any bloom_bits_per_segment
-            # value stays valid for either backend)
-            raw = max(config.bloom_bits_per_segment // 64, 4)
-            self.bloom = CuckooSeenSet(
-                num_partitions=config.bloom_partitions,
-                buckets_per_segment=1 << (raw.bit_length() - 1),
-            )
-        else:
-            self.bloom = BloomSeenSet(
-                num_partitions=config.bloom_partitions,
-                bits_per_segment=config.bloom_bits_per_segment,
-            )
-        self._check_state_format()
-
-    def _check_state_format(self) -> None:
-        """Fail fast when resuming a state_dir written by an incompatible
-        checkpoint layout (e.g. the pre-v2 layout with a separate 'fetched'
-        dir and no 'depth' column in seen_delta) instead of mis-reading it."""
+    def _check_state_format(self) -> dict:
+        """The round-0 commit record ({} before round 0 commits).  Fails
+        fast when resuming a state_dir written by an incompatible checkpoint
+        layout (e.g. the pre-v2 layout with a separate 'fetched' dir and no
+        'depth' column in seen_delta) instead of mis-reading it."""
         if self.last_committed() < 0:
-            return
+            return {}
         rec = self._read_commit(0)
         found = rec.get("format_version")
         if found != STATE_FORMAT_VERSION:
@@ -236,6 +227,7 @@ class CrawlEngine:
                 "Re-crawl into a fresh state_dir (cross-version resume is "
                 "not supported)."
             )
+        return rec
 
     # ------------------------------------------------------------- layout
     def _round_dir(self, k: int) -> str:
@@ -296,7 +288,9 @@ class CrawlEngine:
             json.dump(
                 {"round": 0, "fetched": 0, "total_fetched": 0,
                  "frontier_size": seeded["n"],
-                 "format_version": STATE_FORMAT_VERSION},
+                 "format_version": STATE_FORMAT_VERSION,
+                 "bloom_partitions": self.bloom.num_partitions,
+                 "bloom_bits_per_segment": self.bloom.bits},
                 f,
             )
 
@@ -406,10 +400,9 @@ class CrawlEngine:
         frontier rows (priority = original depth, original fetch_seq) that
         the next round folds into its frontier; consumption is recorded in
         that round's commit, so a crash between expire and commit simply
-        re-consumes.  The prefilter is NOT touched: a stale maybe_seen just
-        routes the URL through the exact anti-join, which now lets it pass
-        (the cuckoo backend's delete can additionally tighten the filter
-        out-of-band).  Returns the number of URLs expired."""
+        re-consumes.  The bloom is NOT touched: a stale maybe_seen just
+        routes the URL through the exact anti-join, which now lets it pass.
+        Returns the number of URLs expired."""
         seen = self.seen()
         if seen is None:
             return 0
@@ -499,7 +492,7 @@ class CrawlEngine:
         seen = self._read_seen(upto)
         if seen is None:
             return -1
-        p = self.cfg.bloom_partitions
+        p = self.bloom.num_partitions
         self._compact(
             "seen_compact", upto,
             seen.repartition(p, F.pmod(F.col("url_hash"), F.lit(p))),

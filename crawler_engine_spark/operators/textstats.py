@@ -180,16 +180,6 @@ def token_count_col(text: Column) -> Column:
     )
 
 
-def bpe_ish_token_count_col(text: Column) -> Column:
-    """Subword-ish token estimate: count of word/number/punct fragments under
-    a BPE-like regex (letters runs, digit runs, single punct)."""
-    frags = F.filter(
-        F.split(text, r"(?<=[\p{L}\p{N}])(?=[^\p{L}\p{N}])|(?<=[^\p{L}\p{N}\s])(?=.)|\s+"),
-        lambda t: t != "",
-    )
-    return F.size(frags)
-
-
 def lang_score_col(text: Column, lang: str) -> Column:
     """Fraction of tokens that are marker stopwords for ``lang``."""
     toks = tokens_lower(text)
@@ -235,10 +225,6 @@ def _lang_counts_agg(text: Column, finish=None) -> Column:
         ),
         finish,
     )
-
-
-def lang_counts_col(text: Column) -> Column:
-    return _lang_counts_agg(text)
 
 
 def _marker_lang_id_col(text: Column) -> Column:
@@ -351,19 +337,6 @@ def fingerprint_col(text: Column) -> Column:
     """64-bit content fingerprint: first 16 hex chars of md5 as a bigint —
     stable across engines (DuckDB computes the same)."""
     return F.conv(F.substring(F.md5(text), 1, 15), 16, 10).cast("long")
-
-
-def char_ngram_fingerprints_col(text: Column, n: int = 8, stride: int = 64) -> Column:
-    """Strided character-n-gram rolling fingerprints (winnowing-style
-    sketch): hash of each n-char window starting at multiples of stride."""
-    return F.transform(
-        F.sequence(
-            F.lit(1),
-            F.greatest(F.length(text) - n + 1, F.lit(1)),
-            F.lit(stride),
-        ),
-        lambda i: F.xxhash64(text.substr(i, F.lit(n))),
-    )
 
 
 def bm25_scores(

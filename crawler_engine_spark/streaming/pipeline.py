@@ -3,8 +3,7 @@
 The crawl itself is round-based (exact resume via committed batch snapshots),
 but a streaming ingestion surface is provided for continuous page feeds:
 ``readStream`` over a growing pages directory → the same vectorized
-extraction kernel → ``writeStream`` sink, plus a watermarked windowed
-aggregation for ingest-rate monitoring.  Incremental file discovery and
+extraction kernel → ``writeStream`` sink.  Incremental file discovery and
 checkpointing come from Structured Streaming; the extraction operator is
 shared byte-for-byte with the batch path.
 """
@@ -247,28 +246,3 @@ def stream_politeness_admit(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def stream_ingest_rates(
-    spark: SparkSession,
-    pages_dir: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window ingest rates per language — late pages
-    beyond the watermark are dropped (classic late-data handling)."""
-    pages = read_pages_stream(spark, pages_dir)
-    return (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "lang")
-        .agg(
-            F.count("*").alias("pages"),
-            F.sum(F.length("html")).alias("bytes"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "lang",
-            "pages",
-            "bytes",
-        )
-    )

@@ -106,7 +106,7 @@ def engine_run(engine_run_rdds):
 
 def test_round_commit_drains_cache_registry(engine_run_rdds):
     """r05 review follow-up: rounds register their intra-round persists
-    (gated / batch / flagged) in the session registry; the
+    (ranked / batch / flagged) in the session registry; the
     round-commit cleanup must drain it, or a long crawl strands several
     batch-sized caches per round.  Persists made outside the registry
     (an operator's own RDD cache) must not outlive the run either, so
@@ -198,8 +198,7 @@ def test_commit_counts_match_written_files(spark, world):
 
 
 _GUARD_CONFIGS = {
-    "bloom": CrawlConfig(seen_filter="bloom"),
-    "cuckoo": CrawlConfig(seen_filter="cuckoo"),
+    "bloom": CrawlConfig(),
     # round 2 ranks the host graph round 1 wrote; round 3 reuses the table
     "link_rank_reuse": CrawlConfig(link_rank_budget=True, link_rank_every=2),
 }
@@ -208,12 +207,11 @@ _GUARD_CONFIGS = {
 @pytest.mark.parametrize("case", list(_GUARD_CONFIGS))
 def test_run_round_spends_no_count_or_collect(spark, world, monkeypatch, case):
     """A round's bookkeeping rides on work it already does: under the
-    default CrawlConfig with either seen-set backend, and in a round that
-    reuses the link-rank table, run_round never calls DataFrame.count, and
-    calls DataFrame.collect only as the seen set's build action
-    (PartitionedSeenSet._build).  No read of the engine's own files infers
-    its schema: the page store's read in round 1 is the only parquet read
-    on a reader with no schema set."""
+    default CrawlConfig, and in a round that reuses the link-rank table,
+    run_round never calls DataFrame.count, and calls DataFrame.collect only
+    as the seen set's build action (BloomSeenSet.update).  No read of the
+    engine's own files infers its schema: the page store's read in round 1
+    is the only parquet read on a reader with no schema set."""
     from pyspark.sql.readwriter import DataFrameReader
 
     state = os.path.join(world["root"], f"state_no_rescans_{case}")
@@ -267,7 +265,7 @@ def test_run_round_spends_no_count_or_collect(spark, world, monkeypatch, case):
         assert not records[3]["link_rank_recomputed"]
         del round_calls[2]
     for k, called in round_calls.items():
-        assert called == {("collect", "bloom.py", "_build")}, (k, called)
+        assert called == {("collect", "bloom.py", "update")}, (k, called)
     assert round_reads == {
         k: [(world["pages_path"],)] if k == 1 else [] for k in rounds
     }, round_reads
@@ -642,6 +640,33 @@ def test_resume_rejects_foreign_state_format(spark, world):
         )
 
 
+def test_resume_keeps_round0_seen_set_geometry(spark, world):
+    """A state dir's bloom geometry is fixed at round 0: resuming it under
+    a config with other bloom knobs reads the segments with the round-0
+    record's geometry, so no segment is misread into false negatives that
+    would skip the exact anti-join and fetch a URL twice."""
+    eng = _make_engine(spark, world, "state_geometry")
+    eng.run(max_rounds=1)
+    eng2 = CrawlEngine(
+        spark,
+        state_dir=eng.state_dir,
+        pages_path=world["pages_path"],
+        robots=world["robots_df"],
+        config=CrawlConfig(round_seconds=ROUND_SECONDS, bloom_partitions=4,
+                           bloom_bits_per_segment=1 << 12),
+    )
+    assert (eng2.bloom.num_partitions, eng2.bloom.bits) == (8, 1 << 16)
+    assert len(eng2.run(max_rounds=2)) == 2
+    dup = (
+        eng2.fetched_log()
+        .groupBy("canonical_url")
+        .count()
+        .where(F.col("count") > 1)
+        .count()
+    )
+    assert dup == 0
+
+
 def test_bloom_no_false_negatives(spark, world, engine_run):
     """Everything in the exact seen set must be flagged maybe_seen by the
     bloom segments (no false negatives — the exactness precondition)."""
@@ -654,20 +679,16 @@ def test_bloom_no_false_negatives(spark, world, engine_run):
     assert flagged.where(~F.col("maybe_seen")).count() == 0
 
 
-@pytest.mark.parametrize("backend", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("backend", ["bloom"])
 def test_seen_set_segment_contract(spark, tmp_path, backend):
-    """Both seen-set backends keep the segment contract: an update writes
-    all P segment files, carrying the partitions it did not touch forward
+    """The seen set keeps the segment contract: an update writes all P
+    segment files, carrying the partitions it did not touch forward
     byte-identical from prev_dir; prev_dir=None starts from empty segments;
     and the probe has no false negatives."""
     from crawler_engine_spark.frontier.bloom import BloomSeenSet
-    from crawler_engine_spark.frontier.cuckoo import CuckooSeenSet
 
     P = 4
-    if backend == "bloom":
-        seen_set = BloomSeenSet(num_partitions=P, bits_per_segment=1 << 12)
-    else:
-        seen_set = CuckooSeenSet(num_partitions=P, buckets_per_segment=1 << 8)
+    seen_set = BloomSeenSet(P, 1 << 12)
     urls = spark.createDataFrame(
         [(f"https://h{i % 7}.example/p{i}",) for i in range(80)],
         "canonical_url string",
