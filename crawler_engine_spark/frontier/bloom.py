@@ -12,7 +12,12 @@ only routes the URL through the exact anti-join.
 
 Sizing math (documented design point): 10^10 keys / 4096 partitions ≈ 2.4M
 keys/segment; at 10 bits/key ≈ 3 MB/segment, 12 GB total, fpr ≈ 0.8%.
-Sandbox default: 32 partitions × 2^20 bits (128 KiB) each.
+Sandbox default: 32 partitions × 2^20 bits (128 KiB in memory) each.
+
+On disk a segment is its packed bitmap, zlib-compressed.  A sparse filter
+shrinks to a few hundred bytes per segment; one near its design fpr is about
+half full and does not compress, so there the state is bounded by retention,
+not by the encoding.
 
 Bit positions use the Kirsch-Mitzenmacher double-hashing scheme over two
 64-bit halves of ``blake2b(canonical_url)`` — computed in Python on both the
@@ -24,6 +29,8 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -31,8 +38,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_NUM_PARTITIONS = 32
-DEFAULT_BITS_PER_SEGMENT = 1 << 20  # 128 KiB / segment in the sandbox
+DEFAULT_BITS_PER_SEGMENT = 1 << 20  # 128 KiB / segment in memory
 NUM_HASHES = 7
+ZLIB_LEVEL = 6
 
 
 def _bit_positions(url: str, m: int) -> np.ndarray:
@@ -46,18 +54,18 @@ def _bit_positions(url: str, m: int) -> np.ndarray:
 
 class BloomSeenSet:
     """A URL-seen set of ``num_partitions`` Bloom segments of
-    ``bits_per_segment`` bits each, one packed file per partition per round
-    directory.  Rows carry ``canonical_url`` (the key) and ``url_hash``
-    (xxhash64 of it, for routing).
+    ``bits_per_segment`` bits each, one zlib-compressed packed file per
+    partition per round directory.  Rows carry ``canonical_url`` (the key)
+    and ``url_hash`` (xxhash64 of it, for routing).
 
     * Routing: ``pid = pmod(url_hash, P)`` (JVM-side); partition ``pid``
       owns the segment file ``segment_<pid>.bin``.
     * Build (:meth:`update`): one ``groupBy(pid).applyInPandas`` pass in
       which each task reads only its segment from ``prev_dir``, inserts its
       keys, and writes the segment to ``out_dir``; one ``collect`` returns
-      the touched pids.  The driver then copies each untouched segment from
-      ``prev_dir`` (an empty segment when there is none), so every round
-      directory holds all P segments.
+      the touched pids.  The driver then copies each untouched segment file
+      from ``prev_dir`` byte for byte (the empty segment when there is
+      none), so every round directory holds all P segments.
     * Probe (:meth:`flag_maybe_seen`): candidates grouped by pid; each task
       loads one segment and appends ``maybe_seen``.  No false negatives, so
       ``maybe_seen = false`` rows are definitely new.
@@ -75,13 +83,19 @@ class BloomSeenSet:
         """Partition ``pid``'s segment under ``root``; empty when missing."""
         path = self._path(root, pid) if root else None
         if path and os.path.exists(path):
-            return np.unpackbits(np.fromfile(path, dtype=np.uint8))[: self.bits].astype(bool)
+            with open(path, "rb") as f:
+                packed = np.frombuffer(zlib.decompress(f.read()), dtype=np.uint8)
+            return np.unpackbits(packed)[: self.bits].astype(bool)
         return np.zeros(self.bits, dtype=bool)
 
     def _store(self, bits: np.ndarray, root: str, pid: int) -> None:
+        self._put(zlib.compress(np.packbits(bits), ZLIB_LEVEL), root, pid)
+
+    def _put(self, blob: bytes, root: str, pid: int) -> None:
         os.makedirs(root, exist_ok=True)
         path = self._path(root, pid)
-        np.packbits(bits.astype(np.uint8)).tofile(path + ".tmp")
+        with open(path + ".tmp", "wb") as f:
+            f.write(blob)
         os.replace(path + ".tmp", path)
 
     def _routed(self, df: DataFrame) -> DataFrame:
@@ -106,9 +120,16 @@ class BloomSeenSet:
             build, "pid int, n long"
         )
         touched = {r["pid"] for r in written.collect()}
+        empty = zlib.compress(np.packbits(np.zeros(self.bits, dtype=bool)), ZLIB_LEVEL)
+        os.makedirs(out_dir, exist_ok=True)
         for pid in range(self.num_partitions):
-            if pid not in touched:
-                self._store(self._read(prev_dir, pid), out_dir, pid)
+            if pid in touched:
+                continue
+            src = self._path(prev_dir, pid) if prev_dir else None
+            if src and os.path.exists(src):
+                shutil.copyfile(src, self._path(out_dir, pid))
+            else:
+                self._put(empty, out_dir, pid)
         return len(touched)
 
     # ------------------------------------------------------------- probe

@@ -78,8 +78,9 @@ ROUND_SCHEMAS = {
 
 # Checkpoint layout version, stamped into the round-0 commit record.  Bump
 # when the on-disk layout changes incompatibly (v2: seen_delta carries the
-# fetched log incl. 'depth'; the v1 per-round 'fetched' dir is gone).
-STATE_FORMAT_VERSION = 2
+# fetched log incl. 'depth'; the v1 per-round 'fetched' dir is gone; v3:
+# bloom segments are zlib-compressed).
+STATE_FORMAT_VERSION = 3
 
 
 def write_counted(df: DataFrame, path: str, **counts: Column) -> dict:
@@ -111,6 +112,17 @@ def _with_url_keys(df: DataFrame) -> DataFrame:
         "host": urlops.host_col(url),
         "path": urlops.path_col(url),
     })
+
+
+def fetch_simulate(selected: DataFrame, pages: DataFrame) -> DataFrame:
+    """The batch left-joined to the page store (``url``, ``html``), with
+    ``fetch_status`` "ok" where the store has the page, else "miss".  A
+    store under ``autoBroadcastJoinThreshold`` is broadcast to the batch;
+    a larger one makes this a sort-merge join that shuffles both sides."""
+    batch = selected.join(pages, selected.canonical_url == pages.url, how="left")
+    return batch.drop("url").withColumn(
+        "fetch_status", F.when(F.col("html").isNotNull(), "ok").otherwise("miss")
+    )
 
 
 def committed_rounds(state_dir: str) -> List[int]:
@@ -247,6 +259,14 @@ class CrawlEngine:
         with open(self._commit_path(k)) as f:
             return json.load(f)
 
+    def _write_commit(self, k: int, record: dict) -> None:
+        """Commit round ``k``: the marker appears whole, by rename, or not
+        at all, so a crash mid-write leaves the round uncommitted."""
+        path = self._commit_path(k)
+        with open(path + ".tmp", "w") as f:
+            json.dump(record, f)
+        os.replace(path + ".tmp", path)
+
     def _read(self, name: str, rounds: List[int],
               base: Optional[str] = None) -> Optional[DataFrame]:
         return read_rounds(self.spark, self.state_dir, name, rounds, base)
@@ -284,15 +304,14 @@ class CrawlEngine:
             shutil.rmtree(rd)
         seeded = write_counted(frontier, os.path.join(rd, "frontier"))
         os.makedirs(os.path.join(rd, "bloom"), exist_ok=True)
-        with open(self._commit_path(0), "w") as f:
-            json.dump(
-                {"round": 0, "fetched": 0, "total_fetched": 0,
-                 "frontier_size": seeded["n"],
-                 "format_version": STATE_FORMAT_VERSION,
-                 "bloom_partitions": self.bloom.num_partitions,
-                 "bloom_bits_per_segment": self.bloom.bits},
-                f,
-            )
+        self._write_commit(
+            0,
+            {"round": 0, "fetched": 0, "total_fetched": 0,
+             "frontier_size": seeded["n"],
+             "format_version": STATE_FORMAT_VERSION,
+             "bloom_partitions": self.bloom.num_partitions,
+             "bloom_bits_per_segment": self.bloom.bits},
+        )
 
     # -------------------------------------------------------------- round
     def _read_frontier(self, k: int) -> DataFrame:
@@ -646,12 +665,7 @@ class CrawlEngine:
         )
 
         # 3. fetch-simulate (J2): left join against the page store
-        batch = selected.join(
-            self._pages, selected.canonical_url == self._pages.url, how="left"
-        ).drop("url")
-        batch = batch.withColumn(
-            "fetch_status", F.when(F.col("html").isNotNull(), "ok").otherwise("miss")
-        ).cache()
+        batch = fetch_simulate(selected, self._pages).cache()
         caches.register(batch)
 
         # 4. extraction (vectorized kernel) over successfully "fetched" pages;
@@ -856,8 +870,7 @@ class CrawlEngine:
         # and registered caches are recomputable persists, never cuts.
         caches.release_all()
         # 11. atomic commit marker — written LAST
-        with open(self._commit_path(k), "w") as f:
-            json.dump(record, f)
+        self._write_commit(k, record)
         return record
 
     # ---------------------------------------------------------------- run

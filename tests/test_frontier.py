@@ -387,6 +387,53 @@ def test_resume_exact_state(spark, world, oracle):
     assert got_seen == sim_seen
 
 
+def test_crash_mid_commit_leaves_round_uncommitted(spark, world, oracle, monkeypatch):
+    """A crash while round 2's commit record is being written leaves a
+    truncated ``_COMMIT.tmp``, never a truncated ``_COMMIT``: round 2 counts
+    as uncommitted, and a resumed engine re-runs it to the uninterrupted
+    fetch log and seen set."""
+    from types import SimpleNamespace
+
+    from crawler_engine_spark.frontier import rounds
+
+    sim_log, sim_seen = oracle
+    eng = _make_engine(spark, world, "state_commit_crash")
+    eng.run(max_rounds=1)
+
+    def dump_then_crash(record, f):
+        f.write(json.dumps(record)[:20])
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(rounds, "json", SimpleNamespace(load=json.load, dump=dump_then_crash))
+        with pytest.raises(OSError, match="disk full"):
+            eng.run(max_rounds=1)
+    with open(eng._commit_path(2) + ".tmp") as f:
+        with pytest.raises(json.JSONDecodeError):
+            json.load(f)
+    assert eng.committed_rounds() == [0, 1]
+
+    eng2 = CrawlEngine(
+        spark,
+        state_dir=eng.state_dir,
+        pages_path=world["pages_path"],
+        robots=world["robots_df"],
+        config=CrawlConfig(round_seconds=ROUND_SECONDS, bloom_partitions=8,
+                           bloom_bits_per_segment=1 << 16),
+    )
+    eng2.run(max_rounds=3)  # rounds 2, 3 and 4
+    assert not os.path.exists(eng2._commit_path(2) + ".tmp")
+    got = (
+        eng2.fetched_log()
+        .orderBy("round", "fetch_seq")
+        .select("round", "fetch_seq", "canonical_url")
+        .collect()
+    )
+    expected = [(f.round, f.fetch_seq, f.url) for f in sim_log]
+    assert [(r["round"], r["fetch_seq"], r["canonical_url"]) for r in got] == expected
+    assert {r["canonical_url"] for r in eng2.seen().collect()} == sim_seen
+
+
 def test_seen_compaction_preserves_semantics(spark, world, oracle):
     """Compaction is pure read-fan-in optimization: a crawl that compacts
     after every round yields the identical fetched log and seen set as the
@@ -640,6 +687,27 @@ def test_resume_rejects_foreign_state_format(spark, world):
         )
 
 
+def test_resume_rejects_v2_state_format(spark, world):
+    """A state_dir stamped format 2 (raw, uncompressed bloom segments) is
+    refused on resume rather than its segments misread."""
+    eng = _make_engine(spark, world, "state_fmt_v2")
+    commit0 = eng._commit_path(0)
+    with open(commit0) as f:
+        rec = json.load(f)
+    rec["format_version"] = 2
+    with open(commit0, "w") as f:
+        json.dump(rec, f)
+    with pytest.raises(RuntimeError, match="checkpoint format"):
+        CrawlEngine(
+            spark,
+            state_dir=eng.state_dir,
+            pages_path=world["pages_path"],
+            robots=world["robots_df"],
+            config=CrawlConfig(round_seconds=ROUND_SECONDS, bloom_partitions=8,
+                               bloom_bits_per_segment=1 << 16),
+        )
+
+
 def test_resume_keeps_round0_seen_set_geometry(spark, world):
     """A state dir's bloom geometry is fixed at round 0: resuming it under
     a config with other bloom knobs reads the segments with the round-0
@@ -679,12 +747,14 @@ def test_bloom_no_false_negatives(spark, world, engine_run):
     assert flagged.where(~F.col("maybe_seen")).count() == 0
 
 
-@pytest.mark.parametrize("backend", ["bloom"])
-def test_seen_set_segment_contract(spark, tmp_path, backend):
+def test_seen_set_segment_contract(spark, tmp_path):
     """The seen set keeps the segment contract: an update writes all P
     segment files, carrying the partitions it did not touch forward
     byte-identical from prev_dir; prev_dir=None starts from empty segments;
-    and the probe has no false negatives."""
+    the probe has no false negatives; a segment decodes to the bits it was
+    stored from; and a sparse segment is stored compressed."""
+    import numpy as np
+
     from crawler_engine_spark.frontier.bloom import BloomSeenSet
 
     P = 4
@@ -711,11 +781,28 @@ def test_seen_set_segment_contract(spark, tmp_path, backend):
     assert sorted(os.listdir(d0)) == sorted(os.listdir(d1))
     # partitions 0, 1 are untouched by the second update: carried forward
     assert [x == y for x, y in zip(b0, b1)] == [True, True, False, False]
+    # every untouched segment is its prev_dir file, byte for byte
+    for pid in (0, 1):
+        assert (d1 / f"segment_{pid:05d}.bin").read_bytes() == (
+            d0 / f"segment_{pid:05d}.bin"
+        ).read_bytes()
     # prev_dir=None: partitions 2, 3 start as the empty segment
     assert b0[2] == b0[3]
     assert seen_set.flag_maybe_seen(second, str(d0)).where("maybe_seen").count() == 0
     flagged = seen_set.flag_maybe_seen(first.unionByName(second), str(d1))
     assert flagged.where(~F.col("maybe_seen")).count() == 0
+
+    # a stored segment reads back as the same bits
+    bits = np.random.default_rng(0).random(seen_set.bits) < 0.1
+    seen_set._store(bits, str(tmp_path / "rt"), 0)
+    assert np.array_equal(seen_set._read(str(tmp_path / "rt"), 0), bits)
+
+    # a sparse segment (20 keys in 2^16 bits) is stored in under 1/8 of its
+    # raw 8 KiB
+    sparse = BloomSeenSet(1, 1 << 16)
+    d2 = tmp_path / "sparse"
+    assert sparse.update(urls.limit(20).drop("pid"), prev_dir=None, out_dir=str(d2)) == 1
+    assert (d2 / "segment_00000.bin").stat().st_size < (1 << 16) // 8 // 8
 
 
 def test_host_reputation_scales_budgets(spark):

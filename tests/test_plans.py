@@ -144,6 +144,27 @@ def test_batch_selection_shuffles_no_host_only_exchange(spark, frontier_df):
         assert "LeftAnti" not in _plan(df)
 
 
+def test_fetch_simulate_broadcasts_page_store(spark, pages_path, frontier_df):
+    """J2: the fetch-simulate join is a left outer join that broadcasts the
+    page store (the build side) to the batch while the store is under
+    ``autoBroadcastJoinThreshold``; above it the plan falls back to a
+    sort-merge join, which shuffles the store."""
+    from crawler_engine_spark.frontier.rounds import fetch_simulate
+
+    pages = spark.read.parquet(pages_path).select("url", "html")
+    plan = _plan(fetch_simulate(frontier_df, pages))
+    assert re.search(r"BroadcastHashJoin .*, LeftOuter, BuildRight", plan), plan
+    assert "SortMergeJoin" not in plan, plan
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = _plan(fetch_simulate(frontier_df, pages))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert re.search(r"SortMergeJoin .*, LeftOuter", plan), plan
+    assert "BroadcastHashJoin" not in plan, plan
+
+
 def test_fetch_sequence_has_no_single_partition_window(spark, frontier_df):
     """fetch_seq must be a distributed ranked sequence, not `Window [...]
     over ()` on one partition: one range-partitioned sort on the full
